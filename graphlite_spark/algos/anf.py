@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphlite_spark.algos.components import symmetrize
+from graphlite_spark.checkpoint import loop_scope
 from graphlite_spark.functions.hashes import hash48
 from graphlite_spark.operators.sketches import HASH_SPACE
 
@@ -49,41 +50,7 @@ def neighborhood_function(
     sketch is the k smallest md5 hashes of the ball, the estimate is
     ``(k-1)·2^48 div h_k`` (exact count below k), and the oracle unrolls
     the identical iterations."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
     spark = edges.sparkSession
-    saved = {
-        k_: spark.conf.get(k_)
-        for k_ in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # data-sized loop width + a pre-sorted static edge leaf (the Pregel
-    # discipline): the scatter join and the sketch window then replan
-    # onto ONE exchange per iteration — the leaf rides hash(src) sorted,
-    # the state leaf rides hash(id)=hash(src-alias) sorted out of the
-    # previous window, so the SMJ needs neither exchange nor sort.
-    und0 = (
-        edges if already_undirected else symmetrize(edges)
-    ).select("src", "dst").localCheckpoint(eager=True)
-    n_arcs = und0.count()
-    P = max(1, min(int(saved["spark.sql.shuffle.partitions"]),
-                   n_arcs // 100_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    und = (
-        und0.repartition(P, "src")
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(und0)
-    state = vertices.select(
-        "id",
-        hash48(F.concat(F.lit("nf:"), F.col("id").cast("string"))).alias("hv"),
-    ).localCheckpoint(eager=True)
     mult = (k - 1) * HASH_SPACE
     est_expr = (
         F.when(F.col("n") < k, F.col("n"))
@@ -98,10 +65,23 @@ def neighborhood_function(
         total = per_v.select(F.sum(est_expr).alias("s")).collect()[0]["s"]
         return total if total is not None else 0  # empty vertex set
 
-    rows = [(0, int(n_of_h(state)))]
     w = Window.partitionBy("id").orderBy("hv")
-    owned = [state]
-    try:
+    # the sorted src leaf: the scatter join and the sketch window replan
+    # onto ONE exchange per iteration — the state leaf rides hash(id) =
+    # hash(src-alias) sorted out of the previous window, so the SMJ needs
+    # neither exchange nor sort
+    with loop_scope(spark) as scope:
+        und = scope.leaf(
+            (edges if already_undirected else symmetrize(edges))
+            .select("src", "dst"),
+            "src",
+        )
+        state = scope.own(vertices.select(
+            "id",
+            hash48(F.concat(F.lit("nf:"), F.col("id").cast("string")))
+            .alias("hv"),
+        ).localCheckpoint(eager=True))
+        rows = [(0, int(n_of_h(state)))]
         for h in range(1, max_h + 1):
             merged = (
                 und.join(
@@ -118,21 +98,13 @@ def neighborhood_function(
             dedup = merged.withColumn("_p", F.lag("hv").over(w)).where(
                 F.col("_p").isNull() | (F.col("_p") != F.col("hv"))
             )
-            new_state = (
+            state = scope.own(
                 dedup.withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") <= k)
                 .select("id", "hv")
                 .localCheckpoint(eager=True)
             )
-            owned.append(new_state)
-            state = new_state
             rows.append((h, int(n_of_h(state))))
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(und)
-        for df in owned:
-            release_local_checkpoint(df)
     return spark.createDataFrame(
         [(int(h), int(n)) for h, n in rows], "h bigint, est_pairs bigint"
     )

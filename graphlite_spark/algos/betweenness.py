@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import truncate_plan
+from graphlite_spark.checkpoint import loop_scope, truncate_plan
 
 MICRO = 1_000_000
 
@@ -63,26 +63,16 @@ def betweenness_sampled(
     if not sources or len(set(sources)) != len(sources):
         raise ValueError("sources must be non-empty and distinct")
     spark = edges.sparkSession
-    P = num_partitions or max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), 1
-    )
-    saved = {
-        "spark.sql.adaptive.enabled":
-            spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.shuffle.partitions":
-            spark.conf.get("spark.sql.shuffle.partitions"),
-    }
-    arcs = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(P, "src")
-        .persist()
-    )
     src_df = spark.createDataFrame([(int(s),) for s in sources], "s long")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
+    with loop_scope(spark, num_partitions) as scope:
+        # width: num_partitions, else the session's
+        arcs = scope.own(
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition("src")
+            .persist()
+        )
         # ---- forward: levels[t] = (s, v, sigma) first reached at hop t
         lvl0 = truncate_plan(
             src_df.select(
@@ -170,8 +160,4 @@ def betweenness_sampled(
             ),
             eager=True,
         )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        arcs.unpersist()
     return out

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphlite_spark.checkpoint import loop_scope
 from graphlite_spark.operators.pregel import (
     PregelAlgorithm,
     PregelEngine,
@@ -107,19 +108,18 @@ def shortest_path_counts(
     vertices report dist = INF, σ = 0.  σ can overflow 2^63 beyond
     ~depth-90 dense graphs — at that point the count is a research
     question, not a pipeline statistic."""
-    spark = edges.sparkSession
-    e = edges.select("src", "dst").persist()
-    state = vertices.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0)).cast("long").alias("dist"),
-        F.when(F.col("id") == source, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("sigma"),
-    ).localCheckpoint(eager=False)
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    # broadcast=True: each layer joins a small frontier against the whole
+    # edge set; shuffling the edges instead measured 1.2x the wall at sf0.01
+    with loop_scope(edges.sparkSession, broadcast=True) as scope:
+        e = scope.own(edges.select("src", "dst").persist())
+        state = vertices.select(
+            "id",
+            F.when(F.col("id") == source, F.lit(0)).cast("long").alias("dist"),
+            F.when(F.col("id") == source, F.lit(1))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("sigma"),
+        ).localCheckpoint(eager=False)
         for d in range(1, depth + 1):
             frontier = state.where(F.col("dist") == d - 1).select(
                 F.col("id").alias("src"), "sigma"
@@ -147,9 +147,6 @@ def shortest_path_counts(
                 .localCheckpoint(eager=False)
             )
         state.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        e.unpersist()
     return state.select(
         "id",
         F.coalesce("dist", F.lit(INF)).cast("long").alias("dist"),
@@ -180,15 +177,13 @@ def stress_from_source(
     column name's contract.  Per layer: one equi-join + one map-side
     combined sum; multi-edges count as distinct continuations on both
     sides, consistent with σ."""
-    spark = edges.sparkSession
     fwd = shortest_path_counts(vertices, edges, source, depth)
-    e = edges.select("src", "dst").persist()
-    state = fwd.withColumn("g", F.lit(0).cast("long")).localCheckpoint(
-        eager=False
-    )
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    # broadcast=True: the shortest_path_counts frontier rule, reversed
+    with loop_scope(edges.sparkSession, broadcast=True) as scope:
+        e = scope.own(edges.select("src", "dst").persist())
+        state = fwd.withColumn("g", F.lit(0).cast("long")).localCheckpoint(
+            eager=False
+        )
         for d in range(depth - 1, -1, -1):
             nxt = state.where(F.col("dist") == d + 1).select(
                 F.col("id").alias("dst"), F.col("g").alias("gw")
@@ -216,9 +211,6 @@ def stress_from_source(
                 .localCheckpoint(eager=False)
             )
         state.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        e.unpersist()
     return state.select(
         "id",
         "dist",

@@ -47,7 +47,7 @@ from graphlite_spark.algos.scc import (
     _min_reach_fixpoint,
     strongly_connected_components,
 )
-from graphlite_spark.checkpoint import truncate_plan
+from graphlite_spark.checkpoint import loop_scope, truncate_plan
 
 
 def _reached_from(
@@ -121,46 +121,28 @@ def bowtie_decomposition(
     auto-sizes the shuffle width to ~E/100k (the engine's graph-load
     discipline) — every fixpoint round below is a fixed number of
     shuffles, so width must track graph size, not the session default."""
-    spark = edges.sparkSession
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    e = truncate_plan(e, eager=True)  # reused by 7 fixpoints below
-    # the vertex set is read ~7x (bounds, SCC, 4 reachability remaps,
-    # weak CC) — stage it once instead of re-running the caller's
-    # derivation (often a distinct over a raw scan) per reference
-    vertices = truncate_plan(vertices.select("id"), eager=True)
-    if num_partitions is None:
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        P = max(1, min(default_p, -(-e.count() // 100_000)))
-    else:
-        P = num_partitions
-    bounds = vertices.agg(
-        F.min("id").alias("mn"), F.max("id").alias("mx"),
-        F.count(F.lit(1)).alias("nv"),
-    ).first()
-    if not bounds["nv"]:
-        return vertices.select("id", F.lit("DISCONNECTED").alias("cls"))
-    min_id, span = bounds["mn"], bounds["mx"] - bounds["mn"] + 1
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        # leaf stats would otherwise drive V-sized driver broadcasts in
-        # the direct _min_reach_fixpoint calls (the Pregel-loop finding)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # the nested SCC and CC scopes restore this scope's settings, and the
+    # direct _min_reach_fixpoint calls run under its pinned width
+    with loop_scope(edges.sparkSession, num_partitions) as scope:
+        # reused by 7 fixpoints below; sizes the width
+        e = scope.stage(
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .distinct(),
+            truncate=True,
+        )
+        P = scope.num_partitions
+        # the vertex set is read ~7x (bounds, SCC, 4 reachability remaps,
+        # weak CC) — stage it once instead of re-running the caller's
+        # derivation (often a distinct over a raw scan) per reference
+        vertices = truncate_plan(vertices.select("id"), eager=True)
+        bounds = vertices.agg(
+            F.min("id").alias("mn"), F.max("id").alias("mx"),
+            F.count(F.lit(1)).alias("nv"),
+        ).first()
+        if not bounds["nv"]:
+            return vertices.select("id", F.lit("DISCONNECTED").alias("cls"))
+        min_id, span = bounds["mn"], bounds["mx"] - bounds["mn"] + 1
         scc = truncate_plan(
             strongly_connected_components(
                 vertices, e, num_partitions=P, max_rounds=max_rounds
@@ -237,6 +219,3 @@ def bowtie_decomposition(
         )
         # eager: the result must execute inside the pinned-conf scope
         return truncate_plan(res, eager=True)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)

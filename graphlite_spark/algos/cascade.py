@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphlite_spark.algos.components import symmetrize
+from graphlite_spark.checkpoint import loop_scope
 from graphlite_spark.functions.hashes import hash48
 
 SEED_MOD = 8  # hash48('ltseed:'||id) % SEED_MOD == 0 -> seed
@@ -48,39 +49,36 @@ def lt_cascade(
 ) -> DataFrame:
     """(id, theta_micros, deg, active_round) — active_round is the LT
     activation round (0 = seed), -1 if still inactive after ``rounds``."""
-    spark = edges.sparkSession
-    und = symmetrize(edges).select("src", "dst").persist()
-    deg = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    state = (
-        vertices.select("id")
-        .join(deg, "id", "left")
-        .select(
-            "id",
-            (
-                1
-                + hash48(F.concat(F.lit("lt:"), F.col("id").cast("string")))
-                % 1000000
-            )
-            .cast("long")
-            .alias("theta"),
-            F.coalesce("deg", F.lit(0)).cast("long").alias("deg"),
-            F.when(
-                hash48(F.concat(F.lit("ltseed:"), F.col("id").cast("string")))
-                % seed_mod
-                == 0,
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("rnd"),
-            F.lit(0).cast("long").alias("acc"),
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.own(symmetrize(edges).select("src", "dst").persist())
+        deg = und.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("deg")
         )
-        .localCheckpoint(eager=False)
-    )
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+        state = (
+            vertices.select("id")
+            .join(deg, "id", "left")
+            .select(
+                "id",
+                (
+                    1
+                    + hash48(F.concat(F.lit("lt:"), F.col("id").cast("string")))
+                    % 1000000
+                )
+                .cast("long")
+                .alias("theta"),
+                F.coalesce("deg", F.lit(0)).cast("long").alias("deg"),
+                F.when(
+                    hash48(F.concat(F.lit("ltseed:"), F.col("id").cast("string")))
+                    % seed_mod
+                    == 0,
+                    F.lit(0),
+                )
+                .cast("long")
+                .alias("rnd"),
+                F.lit(0).cast("long").alias("acc"),
+            )
+            .localCheckpoint(eager=False)
+        )
         for r in range(1, rounds + 1):
             frontier = state.where(F.col("rnd") == r - 1).select(
                 F.col("id").alias("src")
@@ -115,9 +113,6 @@ def lt_cascade(
                 .localCheckpoint(eager=False)
             )
         state.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        und.unpersist()
     return state.select(
         "id",
         F.col("theta").alias("theta_micros"),
@@ -147,41 +142,38 @@ def ic_cascade(
     run because its src is in the frontier exactly once."""
     from graphlite_spark.functions.hashes import SEP
 
-    spark = edges.sparkSession
-    live = (
-        edges.select("src", "dst")
-        .where(
-            hash48(
-                F.concat_ws(
-                    SEP,
-                    F.lit("ic"),
-                    F.col("src").cast("string"),
-                    F.col("dst").cast("string"),
+    with loop_scope(edges.sparkSession) as scope:
+        live = scope.own(
+            edges.select("src", "dst")
+            .where(
+                hash48(
+                    F.concat_ws(
+                        SEP,
+                        F.lit("ic"),
+                        F.col("src").cast("string"),
+                        F.col("dst").cast("string"),
+                    )
                 )
+                % 1000000
+                < p_micros
             )
-            % 1000000
-            < p_micros
+            .distinct()
+            .persist()
         )
-        .distinct()
-        .persist()
-    )
-    state = (
-        vertices.select(
-            "id",
-            F.when(
-                hash48(F.concat_ws(SEP, F.lit("icseed"), F.col("id").cast("string")))
-                % seed_mod
-                == 0,
-                F.lit(0),
+        state = (
+            vertices.select(
+                "id",
+                F.when(
+                    hash48(F.concat_ws(SEP, F.lit("icseed"), F.col("id").cast("string")))
+                    % seed_mod
+                    == 0,
+                    F.lit(0),
+                )
+                .cast("long")
+                .alias("rnd"),
             )
-            .cast("long")
-            .alias("rnd"),
+            .localCheckpoint(eager=False)
         )
-        .localCheckpoint(eager=False)
-    )
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
         for r in range(1, rounds + 1):
             frontier = state.where(F.col("rnd") == r - 1).select(
                 F.col("id").alias("src")
@@ -203,9 +195,6 @@ def ic_cascade(
                 .localCheckpoint(eager=False)
             )
         state.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        live.unpersist()
     return state.select(
         "id", F.coalesce("rnd", F.lit(-1)).cast("long").alias("active_round")
     )

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphlite_spark.checkpoint import loop_scope
 from graphlite_spark.operators.pregel import (
     PregelAlgorithm,
     PregelEngine,
@@ -286,37 +287,6 @@ def lin_centrality(
     )
 
 
-def _src_loop_leaf(edges: DataFrame):
-    """(leaf, saved_conf) — the linear-gather loop prologue shared by
-    katz/eigenvector: a pre-sorted hash(src) edge leaf, data-sized
-    shuffle width, AQE and auto-broadcast pinned off.  Caller restores
-    ``saved_conf`` and releases the leaf in its ``finally``."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    saved = {
-        k_: spark.conf.get(k_)
-        for k_ in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    e0 = edges.select("src", "dst").localCheckpoint(eager=True)
-    n_e = e0.count()
-    P = max(1, min(int(saved["spark.sql.shuffle.partitions"]),
-                   n_e // 100_000 + 1))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    leaf = (
-        e0.repartition(P, "src").sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(e0)
-    return leaf, saved
-
-
 def katz_centrality(
     vertices: DataFrame,
     edges: DataFrame,
@@ -337,15 +307,12 @@ def katz_centrality(
     round: one equi-join + one map-side-combined groupBy — rank-sized
     shuffles; loop discipline matches the engine (AQE off, lazy
     localCheckpoint per round)."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
     MICRO = 1_000_000
-    spark = edges.sparkSession
-    e, saved = _src_loop_leaf(edges)
-    state = vertices.select(
-        "id", F.lit(MICRO).cast("long").alias("katz")
-    ).localCheckpoint(eager=False)
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        e = scope.leaf(edges.select("src", "dst"), "src")
+        state = vertices.select(
+            "id", F.lit(MICRO).cast("long").alias("katz")
+        ).localCheckpoint(eager=False)
         for _ in range(iterations):
             msg = (
                 e.join(
@@ -370,10 +337,6 @@ def katz_centrality(
                 .localCheckpoint(eager=False)
             )
         state.count()
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(e)
     return state
 
 
@@ -402,15 +365,12 @@ def eigenvector_centrality(
     Per round: one equi-join + one map-side-combined groupBy + a 1-ROW
     max broadcast back — rank-sized shuffles, loop discipline matches
     the engine (AQE off, lazy localCheckpoint per round)."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
     MICRO = 1_000_000
-    spark = edges.sparkSession
-    e, saved = _src_loop_leaf(edges)
-    state = vertices.select(
-        "id", F.lit(MICRO).cast("long").alias("eig")
-    ).localCheckpoint(eager=False)
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        e = scope.leaf(edges.select("src", "dst"), "src")
+        state = vertices.select(
+            "id", F.lit(MICRO).cast("long").alias("eig")
+        ).localCheckpoint(eager=False)
         for _ in range(iterations):
             msg = (
                 e.join(state.select(F.col("id").alias("src"), "eig"), "src")
@@ -439,10 +399,6 @@ def eigenvector_centrality(
                 .localCheckpoint(eager=False)
             )
         out = state.localCheckpoint(eager=True)
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(e)
     return out
 
 
@@ -487,72 +443,15 @@ def spectral_gap_lambda2(
     1-row scalar actions (the k-means collect discipline) — rank-sized
     shuffles, AQE off, lazy localCheckpoint per round (linear loop,
     no self-join: plain checkpoint suffices, cf. CLAUDE.md)."""
+    from graphlite_spark.functions.hashes import hash48
+
     MICRO = 1_000_000
+    dec = "decimal(38,0)"
     spark = edges.sparkSession
     schema = (
         "n_vertices long, n_edges_und long, slem_micros long,"
         " gap_micros long"
     )
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    saved_conf = {
-        k_: spark.conf.get(k_)
-        for k_ in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    und0 = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ).where(F.col("src") != F.col("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_arcs = und0.count()
-    P = max(1, min(int(saved_conf["spark.sql.shuffle.partitions"]),
-                   n_arcs // 100_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    und = (
-        und0.repartition(P, "src")
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(und0)
-    deg = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
-    nv = deg.count()
-    if nv == 0:
-        release_local_checkpoint(und)
-        for k_, v_ in saved_conf.items():
-            spark.conf.set(k_, v_)
-        return spark.createDataFrame([], schema)
-    ne = n_arcs // 2
-    dec = "decimal(38,0)"
-    sdd = int(
-        deg.agg(
-            F.sum((F.col("d").cast(dec) * F.col("d").cast(dec))).alias("s")
-        ).first()["s"]
-    )
-    from graphlite_spark.functions.hashes import hash48
-
-    state = deg.select(
-        "id",
-        "d",
-        (
-            hash48(F.concat(F.lit("sg:"), F.col("id").cast("string")))
-            % F.lit(2 * MICRO + 1)
-            - F.lit(MICRO)
-        ).cast("long").alias("x"),
-    ).localCheckpoint(eager=False)
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     def gather(st: DataFrame) -> DataFrame:
         xd = st.select(
@@ -571,7 +470,39 @@ def spectral_gap_lambda2(
             )
         )
 
-    try:
+    with loop_scope(spark) as scope:
+        und = scope.leaf(
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .unionByName(
+                edges.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                ).where(F.col("src") != F.col("dst"))
+            )
+            .distinct(),
+            "src",
+        )
+        ne = scope.rows // 2
+        deg = und.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).cast("long").alias("d")
+        )
+        nv = deg.count()
+        if nv == 0:
+            return spark.createDataFrame([], schema)
+        sdd = int(
+            deg.agg(
+                F.sum((F.col("d").cast(dec) * F.col("d").cast(dec))).alias("s")
+            ).first()["s"]
+        )
+        state = deg.select(
+            "id",
+            "d",
+            (
+                hash48(F.concat(F.lit("sg:"), F.col("id").cast("string")))
+                % F.lit(2 * MICRO + 1)
+                - F.lit(MICRO)
+            ).cast("long").alias("x"),
+        ).localCheckpoint(eager=False)
         for _ in range(int(iterations)):
             g = gather(state).localCheckpoint(eager=False)
             syd = int(
@@ -618,11 +549,6 @@ def spectral_gap_lambda2(
             )
             .first()
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        for k_, v_ in saved_conf.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(und)
     sxz, sxx = int(fin["sxz"]), int(fin["sxx"])
     lam = None
     if sxx > 0:
@@ -725,45 +651,17 @@ def algebraic_distance(
     lazy localCheckpoint truncates lineage); top-k is
     TakeOrderedAndProject."""
     from graphlite_spark.algos.components import symmetrize
-    from graphlite_spark.checkpoint import release_local_checkpoint, truncate_plan
+    from graphlite_spark.checkpoint import truncate_plan
     from graphlite_spark.functions.hashes import hash48
 
-    spark = edges.sparkSession
-    # loop discipline (the engine-wide rules, measured on the Pregel
-    # loop): stage the closure ONCE as a pre-sorted leaf (it was
-    # re-executing its distinct shuffle ~7x: 5 sweeps + degree + final
-    # pair scan), fold the static degree INTO the state frame (one join
-    # per sweep instead of two), size the shuffle width to the data,
-    # and pin AQE/auto-broadcast off around the sweeps
-    staged = symmetrize(edges).select("src", "dst").localCheckpoint(
-        eager=True
-    )
-    max_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    P = max(1, min(max_p, staged.count() // 100_000 + 1))
-    und = (
-        staged.repartition(P, "src")
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(staged)
-    deg = und.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # stage the closure ONCE as the sorted leaf (it was re-executing its
+    # distinct shuffle ~7x: 5 sweeps + degree + final pair scan) and fold
+    # the static degree INTO the state frame (one join per sweep, not two)
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.leaf(symmetrize(edges).select("src", "dst"), "src")
+        deg = und.groupBy("src").agg(
+            F.count(F.lit(1)).cast("long").alias("deg")
+        )
         x = (
             vertices.select(
                 "id",
@@ -830,8 +728,4 @@ def algebraic_distance(
             ).limit(top_k),
             eager=True,
         )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        release_local_checkpoint(und)
     return out

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import truncate_plan
+from graphlite_spark.checkpoint import loop_scope, truncate_plan
 from graphlite_spark.operators.pregel import (
     PregelAlgorithm,
     PregelEngine,
@@ -113,53 +113,12 @@ def connected_components_fast(
     """
     from pyspark.sql import Observation
 
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
     und = edges if already_undirected else symmetrize(edges)
-    P = num_partitions
-    if P is None:
-        # scale-adaptive width (PregelEngine.prepare rule): ~100k edges
-        # per partition, capped at the session's shuffle parallelism —
-        # a fixed session-wide width schedules 32 near-empty tasks per
-        # stage on small graphs (measured: the per-round cost is stage
-        # scheduling, not compute), while the cap keeps cluster-scale
-        # graphs at cluster-scale parallelism.  The undirected closure
-        # has at most 2|E| arcs, so the raw edge count is the estimator
-        # (one count action; callers pass cached or parquet frames).
-        max_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        P = max(1, min(max_p, 2 * edges.count() // 100_000 + 1))
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
-    # partition by src + eager localCheckpoint (not persist): the per-round
-    # relax join keys on e.src so the layout is reused every round, and the
-    # leaf LogicalRDD plan keeps Catalyst from re-analyzing the whole
-    # symmetrize/distinct tree each round (engine-wide discipline, see
-    # PregelEngine.prepare); blocks released in the finally.
-    # sortWithinPartitions: the checkpoint leaf keeps the sort order, so
-    # the per-round relax SMJ stops re-sorting the immutable edge table
-    # (same plan finding as PregelEngine.prepare)
-    e = (
-        und.select("src", "dst")
-        .repartition(P, "src")
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
     a = vertices.select(F.col("id"), F.col("id").alias("comp"))
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        # the label frame's checkpoint stats are tiny, so Catalyst would
-        # broadcast it into both per-round joins — each round's planning
-        # then BLOCKS building a driver-side broadcast of the V-sized
-        # label table (the Pregel-loop finding, measured via thread
-        # dumps); at 10^12 vertices that plan is fatal, not slow
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # the relax join keys on e.src, so the sorted src leaf is reused
+    # exchange- and sort-free every round
+    with loop_scope(edges.sparkSession, num_partitions) as scope:
+        e = scope.leaf(und.select("src", "dst"), "src")
         for _ in range(max_rounds):
             # relax: comp'(v) = min(comp(v), min over incoming neighbors)
             nbr = (
@@ -196,10 +155,6 @@ def connected_components_fast(
             a = nxt.select("id", "comp")
             if not changed:
                 break
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        release_local_checkpoint(e)
     return a.select("id", F.col("comp").alias("component"))
 
 
@@ -295,31 +250,13 @@ def k_core(
     """
     from pyspark.sql import Observation
 
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
     und = edges if already_undirected else symmetrize(edges)
-    # leaf plan for the loop (engine-wide discipline — see
-    # PregelEngine.prepare): rounds stop re-analyzing the symmetrize/
-    # distinct lineage, and the per-round degree shuffle width follows
-    # the data instead of the session default
-    e0 = und.select("src", "dst").localCheckpoint(eager=True)
     alive = vertices.select("id")
-    prev_n = alive.count()
-    # iterative-loop discipline (same as the Pregel engine): AQE re-plans
-    # the identical round shape every iteration — pure overhead — and the
-    # shuffle width should match the data, not the session default
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        P = max(1, min(
-            int(saved["spark.sql.shuffle.partitions"] or 32),
-            e0.count() // 100_000 + 1,
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
+    # staged closure: rounds stop re-analyzing the symmetrize/distinct
+    # lineage, and the degree shuffle width follows the data
+    with loop_scope(edges.sparkSession) as scope:
+        e0 = scope.stage(und.select("src", "dst"))
+        prev_n = alive.count()
         for _ in range(max_rounds):
             ea = e0.join(
                 alive.select(F.col("id").alias("src")), "src", "left_semi"
@@ -341,10 +278,6 @@ def k_core(
             if n == prev_n:
                 break
             prev_n = n
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(e0)
     core = alive.select(F.col("id").alias("cid"))
     return vertices.select("id").join(
         core, vertices["id"] == core["cid"], "left"
@@ -375,26 +308,12 @@ def coreness(
     """
     from pyspark.sql import Observation
 
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
     und = edges if already_undirected else symmetrize(edges)
-    # leaf plan + observed survivor counts + data-sized shuffle width —
-    # the k_core loop discipline (see k_core above)
-    e0 = und.select("src", "dst").localCheckpoint(eager=True)
     out = vertices.select("id", F.lit(0).cast("long").alias("coreness"))
     alive = vertices.select("id")
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        P = max(1, min(
-            int(saved["spark.sql.shuffle.partitions"] or 32),
-            e0.count() // 100_000 + 1,
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
+    # staged closure + observed survivor counts — the k_core loop
+    with loop_scope(edges.sparkSession) as scope:
+        e0 = scope.stage(und.select("src", "dst"))
         for k in range(1, max_k + 1):
             prev_n = alive.count()
             if prev_n == 0:
@@ -432,10 +351,6 @@ def coreness(
                 )
                 .localCheckpoint(eager=False)
             )
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(e0)
     return out
 
 
@@ -680,31 +595,13 @@ def peel_layer_histogram(
     codebook precedent), never a per-vertex collect."""
     from pyspark.sql import Observation
 
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
     spark = edges.sparkSession
-    und = symmetrize(edges)
-    # leaf plan + observed survivor counts + data-sized shuffle width —
-    # the k_core loop discipline (see k_core)
-    e0 = und.select("src", "dst").localCheckpoint(eager=True)
     alive = vertices.select("id")
-    prev_n = alive.count()
     rows: list[tuple[int, int]] = []
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        P = max(1, min(
-            int(saved["spark.sql.shuffle.partitions"] or 32),
-            e0.count() // 100_000 + 1,
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
+    # staged closure + observed survivor counts — the k_core loop
+    with loop_scope(spark) as scope:
+        e0 = scope.stage(symmetrize(edges).select("src", "dst"))
+        prev_n = alive.count()
         for r in range(1, max_rounds + 1):
             ea = e0.join(
                 alive.select(F.col("id").alias("src")), "src", "left_semi"
@@ -730,10 +627,6 @@ def peel_layer_histogram(
             if n == prev_n:
                 break
             prev_n = n
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(e0)
     if prev_n > 0:
         rows.append((0, prev_n))
     return spark.createDataFrame(

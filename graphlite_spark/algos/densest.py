@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphlite_spark.checkpoint import loop_scope
+
 
 def densest_subgraph_peel(
     vertices: DataFrame,
@@ -40,41 +42,19 @@ def densest_subgraph_peel(
     """(round, n_vertices, n_edges, density_ppm) — the BKV peel trace
     over the undirected simple graph; rows emitted while vertices
     remain.  density_ppm = 1e6 * E div V (exact)."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    saved_conf = {
-        k_: spark.conf.get(k_)
-        for k_ in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    p0 = (
-        edges.select(
-            F.least("src", "dst").alias("lo"),
-            F.greatest("src", "dst").alias("hi"),
-        )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_pairs = p0.count()
-    P = max(1, min(int(saved_conf["spark.sql.shuffle.partitions"]),
-                   n_pairs // 100_000 + 1))
-    pairs = (
-        p0.repartition(P, "lo").sortWithinPartitions("lo")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(p0)
-    alive = vertices.select("id").localCheckpoint(eager=False)
     thresh = 2 * (1000 + eps_permille)
     trace = []
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        pairs = scope.leaf(
+            edges.select(
+                F.least("src", "dst").alias("lo"),
+                F.greatest("src", "dst").alias("hi"),
+            )
+            .where(F.col("lo") != F.col("hi"))
+            .distinct(),
+            "lo",
+        )
+        alive = vertices.select("id").localCheckpoint(eager=False)
         for r in range(rounds + 1):
             e_t = (
                 pairs.join(alive.select(F.col("id").alias("lo")), "lo", "left_semi")
@@ -121,9 +101,4 @@ def densest_subgraph_peel(
             out = out.unionByName(t)
         out = out.localCheckpoint(eager=False)
         out.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        for k_, v_ in saved_conf.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(pairs)
     return out

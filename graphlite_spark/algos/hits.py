@@ -19,45 +19,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphlite_spark.checkpoint import loop_scope
+
 
 def hits(vertices: DataFrame, edges: DataFrame, iterations: int = 3) -> DataFrame:
     """(id, auth, hub) after ``iterations`` rounds (exact longs)."""
     if iterations < 1:
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    saved = {
-        k_: spark.conf.get(k_)
-        for k_ in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    e0 = edges.select("src", "dst").localCheckpoint(eager=True)
-    n_e = e0.count()
-    P = max(1, min(int(saved["spark.sql.shuffle.partitions"]),
-                   n_e // 100_000 + 1))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    # dual gather layouts, as in salsa below: each half-step's SMJ rides
-    # its pre-sorted leaf exchange- and sort-free on the edge side
-    e_src = (
-        e0.repartition(P, "src").sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    e_dst = (
-        e0.repartition(P, "dst").sortWithinPartitions("dst")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(e0)
     v = vertices.select("id")
     hub = v.select("id", F.lit(1).cast("long").alias("hub"))
     auth = None
-    owned: list = []
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        # dual gather layouts, as in salsa below: each half-step's SMJ
+        # rides its pre-sorted leaf exchange- and sort-free on the edge side
+        e0 = scope.stage(edges.select("src", "dst"))
+        e_src, e_dst = scope.leaf(e0, "src"), scope.leaf(e0, "dst")
+        scope.release(e0)
         for _ in range(iterations):
             ag = (
                 e_src.join(hub, e_src["src"] == hub["id"])
@@ -75,16 +52,10 @@ def hits(vertices: DataFrame, edges: DataFrame, iterations: int = 3) -> DataFram
             hub = v.join(hg, v["id"] == hg["vid"], "left").select(
                 "id", F.coalesce("s", F.lit(0)).cast("long").alias("hub")
             )
-            hub = hub.localCheckpoint(eager=True)
-            auth = auth.localCheckpoint(eager=True)
-            owned += [hub, auth]
+            hub = scope.own(hub.localCheckpoint(eager=True))
+            auth = scope.own(auth.localCheckpoint(eager=True))
         out = auth.join(hub, "id").select("id", "auth", "hub")
         out = out.localCheckpoint(eager=True)  # materialize before release
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        for df in (e_src, e_dst, *owned):
-            release_local_checkpoint(df)
     return out
 
 
@@ -105,53 +76,28 @@ def salsa(vertices: DataFrame, edges: DataFrame, iterations: int = 3) -> DataFra
     edges the degree frames broadcast and only the score frame moves."""
     if iterations < 1:
         raise ValueError(f"salsa: iterations must be >= 1, got {iterations}")
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    saved = {
-        k_: spark.conf.get(k_)
-        for k_ in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    e0 = edges.select("src", "dst").localCheckpoint(eager=True)
-    n_e = e0.count()
-    P = max(1, min(int(saved["spark.sql.shuffle.partitions"]),
-                   n_e // 100_000 + 1))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    # dual gather layouts (CSC/CSR): the auth phase gathers along dst,
-    # the hub phase along src — each phase's SMJ rides its leaf sorted,
-    # exchange- and sort-free on the edge side
-    e_dst = (
-        e0.repartition(P, "dst").sortWithinPartitions("dst")
-        .localCheckpoint(eager=True)
-    )
-    e_src = (
-        e0.repartition(P, "src").sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(e0)
     v = vertices.select("id")
-    # degree tables are loop-static: stage once instead of re-running
-    # the groupBy over the edge table at every reference
-    ind = (
-        e_dst.groupBy(F.col("dst").alias("id"))
-        .agg(F.count(F.lit(1)).alias("ind"))
-        .localCheckpoint(eager=True)
-    )
-    outd = (
-        e_src.groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).alias("outd"))
-        .localCheckpoint(eager=True)
-    )
     auth = v.select("id", F.lit(1_000_000).cast("long").alias("auth_m"))
     hub = None
-    owned: list = []
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        # dual gather layouts (CSC/CSR): the auth phase gathers along dst,
+        # the hub phase along src — each phase's SMJ rides its leaf
+        # sorted, exchange- and sort-free on the edge side
+        e0 = scope.stage(edges.select("src", "dst"))
+        e_dst, e_src = scope.leaf(e0, "dst"), scope.leaf(e0, "src")
+        scope.release(e0)
+        # degree tables are loop-static: stage once instead of re-running
+        # the groupBy over the edge table at every reference
+        ind = scope.own(
+            e_dst.groupBy(F.col("dst").alias("id"))
+            .agg(F.count(F.lit(1)).alias("ind"))
+            .localCheckpoint(eager=True)
+        )
+        outd = scope.own(
+            e_src.groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).alias("outd"))
+            .localCheckpoint(eager=True)
+        )
         for _ in range(iterations):
             av = auth.join(ind, "id").select(
                 "id", F.expr("auth_m div ind").cast("long").alias("adiv")
@@ -175,14 +121,8 @@ def salsa(vertices: DataFrame, edges: DataFrame, iterations: int = 3) -> DataFra
             auth = v.join(ag, v["id"] == ag["vid"], "left").select(
                 "id", F.coalesce("s", F.lit(0)).cast("long").alias("auth_m")
             )
-            hub = hub.localCheckpoint(eager=True)
-            auth = auth.localCheckpoint(eager=True)
-            owned += [hub, auth]
+            hub = scope.own(hub.localCheckpoint(eager=True))
+            auth = scope.own(auth.localCheckpoint(eager=True))
         out = auth.join(hub, "id").select("id", "auth_m", "hub_m")
         out = out.localCheckpoint(eager=True)  # materialize before release
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        for df in (e_dst, e_src, ind, outd, *owned):
-            release_local_checkpoint(df)
     return out

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphlite_spark.algos.components import symmetrize
+from graphlite_spark.checkpoint import loop_scope
 from graphlite_spark.functions.hashes import hash48
 
 
@@ -55,19 +56,20 @@ def maximal_matching(
     self-loop-free closure of ``edges``; maximal once the live edge set
     drains (guaranteed in ≤ E rounds, expected O(log E); if
     ``max_rounds`` binds first the oracle binds identically)."""
-    spark = edges.sparkSession
-    live = (
-        symmetrize(edges)
-        .where(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .withColumn("h", _edge_priority())
-        .localCheckpoint(eager=False)
-    )
-    matched = None  # accumulated (id, mate) rows
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        remaining = live.count()
+    # broadcast=True: the live edge set and the per-round minima are
+    # joined against small frames every round; shuffling them instead
+    # measured 1.4x the wall at sf0.01
+    with loop_scope(edges.sparkSession, broadcast=True) as scope:
+        # the staged count sizes the width; coalesced to it, the live set
+        # keeps few partitions through the broadcast joins below
+        live = scope.stage(
+            symmetrize(edges)
+            .where(F.col("src") < F.col("dst"))
+            .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            .withColumn("h", _edge_priority())
+        ).coalesce(scope.num_partitions)
+        matched = None  # accumulated (id, mate) rows
+        remaining = scope.rows
         for _ in range(max_rounds):
             if remaining == 0:
                 break
@@ -107,8 +109,9 @@ def maximal_matching(
             )
             matched = matched.localCheckpoint(eager=False)
             remaining = live.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
+        if matched is not None:
+            # materialize before the scope frees the staged live set
+            matched = matched.localCheckpoint(eager=True)
     out = vertices.select("id")
     if matched is None:
         return out.select("id", F.lit(-1).cast("long").alias("mate"))

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import truncate_plan
+from graphlite_spark.checkpoint import loop_scope, truncate_plan
 
 from graphlite_spark.algos.components import symmetrize
 from graphlite_spark.functions.hashes import hash48
@@ -63,36 +63,6 @@ def _priority(id_col: str = "id") -> F.Column:
     return hash48(F.concat(F.lit("mis:"), F.col(id_col).cast("string")))
 
 
-def _und_loop_leaf(edges: DataFrame):
-    """(leaf, saved_conf) — symmetry-breaking loop prologue: pre-sorted
-    hash(src) leaf of the undirected closure, data-sized width, AQE and
-    auto-broadcast off.  Caller restores conf + releases in finally."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    saved = {
-        k_: spark.conf.get(k_)
-        for k_ in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    u0 = symmetrize(edges).select("src", "dst").localCheckpoint(eager=True)
-    n_arcs = u0.count()
-    P = max(1, min(int(saved["spark.sql.shuffle.partitions"]),
-                   n_arcs // 100_000 + 1))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    und = (
-        u0.repartition(P, "src").sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(u0)
-    return und, saved
-
-
 def maximal_independent_set(
     vertices: DataFrame,
     edges: DataFrame,
@@ -102,14 +72,11 @@ def maximal_independent_set(
     -1 = undecided when ``max_rounds`` bound (the oracle unrolls the same
     cap).  Independence and maximality hold over the undirected,
     self-loop-free closure of ``edges``."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    und, saved = _und_loop_leaf(edges)
-    state = truncate_plan(vertices.select(
-        "id", _priority().alias("h"), F.lit(-1).cast("int").alias("st")
-    ))
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.leaf(symmetrize(edges).select("src", "dst"), "src")
+        state = truncate_plan(vertices.select(
+            "id", _priority().alias("h"), F.lit(-1).cast("int").alias("st")
+        ))
         remaining = state.where(F.col("st") == -1).count()
         for _ in range(max_rounds):
             if remaining == 0:
@@ -169,12 +136,8 @@ def maximal_independent_set(
                 )
             )
             remaining = state.where(F.col("st") == -1).count()
-    finally:
-        # every round's state leaf was materialized by its count(), so
-        # the edge leaf can be freed without orphaning the result
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(und)
+    # every round's state leaf was materialized by its count(), so the
+    # scope freed the edge leaf without orphaning the result
     return state.select("id", F.col("st").cast("long").alias("status"))
 
 
@@ -186,15 +149,12 @@ def greedy_coloring(
     """(id, color) — Jones–Plassmann greedy coloring; colors in
     [0, maxdegree] form a proper coloring of the undirected closure, -1 =
     uncolored when ``max_rounds`` bound (same cap in the oracle)."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    und, saved = _und_loop_leaf(edges)
     pick = F.expr(lowest_missing_color_sql("coalesce(mask, 0)"))
-    state = truncate_plan(vertices.select(
-        "id", _priority().alias("h"), F.lit(-1).cast("int").alias("color")
-    ))
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.leaf(symmetrize(edges).select("src", "dst"), "src")
+        state = truncate_plan(vertices.select(
+            "id", _priority().alias("h"), F.lit(-1).cast("int").alias("color")
+        ))
         remaining = state.where(F.col("color") == -1).count()
         for _ in range(max_rounds):
             if remaining == 0:
@@ -251,8 +211,4 @@ def greedy_coloring(
                 )
             )
             remaining = state.where(F.col("color") == -1).count()
-    finally:
-        for k_, v_ in saved.items():
-            spark.conf.set(k_, v_)
-        release_local_checkpoint(und)
     return state.select("id", F.col("color").cast("long").alias("color"))

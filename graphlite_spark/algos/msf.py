@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphlite_spark.algos.components import connected_components_fast
-from graphlite_spark.checkpoint import truncate_plan
+from graphlite_spark.checkpoint import loop_scope, truncate_plan
 
 
 def boruvka_msf(
@@ -51,41 +51,19 @@ def boruvka_msf(
         .groupBy("lo", "hi")
         .agg(F.min("w").alias("w"))
     )
-    spark = edges.sparkSession
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
     from pyspark.sql import Observation
 
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    staged = truncate_plan(und, eager=True)
-    max_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    P = max(1, min(max_p, staged.count() // 100_000 + 1))
-    # static side of the per-round label joins: partition + pre-sort by
-    # the first join key so the round's SMJ re-sorts only the hi leg
-    und = (
-        staged.repartition(P, "lo")
-        .sortWithinPartitions("lo")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(staged)
+    spark = edges.sparkSession
     comp = vertices.select("id", F.col("id").alias("comp"))
     forest = spark.createDataFrame([], "lo long, hi long, w long")
     converged = False
     prev_comp: DataFrame | None = None
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with loop_scope(spark) as scope:
+        # static side of the per-round label joins: partition + pre-sort
+        # by the first join key so the round's SMJ re-sorts only the hi leg
+        staged = scope.stage(und, truncate=True)
+        und = scope.leaf(staged, "lo")
+        scope.release(staged)
         for _ in range(max_rounds):
             cl = comp.select(
                 F.col("id").alias("lo"), F.col("comp").alias("c1")
@@ -150,7 +128,7 @@ def boruvka_msf(
                 ),
                 max_rounds=64,
             )
-            nxt = truncate_plan(
+            nxt = scope.own(truncate_plan(
                 comp.join(
                     mapping.withColumnRenamed("id", "mid"),
                     comp["comp"] == F.col("mid"),
@@ -160,12 +138,11 @@ def boruvka_msf(
                     F.coalesce("component", F.col("comp")).alias("comp"),
                 ),
                 eager=True,
-            )
+            ))
             if prev_comp is not None:
-                release_local_checkpoint(prev_comp)
-            prev_comp = nxt
-            release_local_checkpoint(chosen)
-            comp = nxt
+                scope.release(prev_comp)
+            scope.release(chosen)
+            prev_comp = comp = nxt
         if not converged:
             # Same loud-PARTIAL convention as scc / connected_components
             # (round-4 advisor): Borůvka needs up to log2(V) rounds — if
@@ -196,12 +173,6 @@ def boruvka_msf(
                     RuntimeWarning,
                     stacklevel=2,
                 )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        release_local_checkpoint(und)
-        if prev_comp is not None:
-            release_local_checkpoint(prev_comp)
     return forest.select("lo", "hi", "w")
 
 

@@ -58,7 +58,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import truncate_plan
+from graphlite_spark.checkpoint import loop_scope, truncate_plan
 
 
 def _min_reach_fixpoint(
@@ -177,66 +177,32 @@ def strongly_connected_components(
     FW/BW peel.  Both caps warn loudly when they bind — like
     connected_components, SCC is convergence-defined and a partial peel
     is only diagnostic."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    de = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    # stage the distinct edge set once, then size the loop's shuffle
-    # width to the DATA (~100k arcs/partition, capped at the session
-    # width) — the engine-wide rule; a fixed session width schedules
-    # dozens of near-empty tasks per round on small graphs
-    de = truncate_plan(de, eager=True)
-    P = num_partitions
-    if P is None:
-        max_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        P = max(1, min(max_p, de.count() // 100_000 + 1))
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
     rem = vertices.select("id")
     assigned: DataFrame | None = None
     converged = False
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        # checkpoint-leaf stats are tiny: without this Catalyst plans a
-        # driver-side broadcast of the V-sized label frame into every
-        # round's joins (the measured Pregel-loop pathology)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with loop_scope(edges.sparkSession, num_partitions) as scope:
+        # stage the distinct edge set once (plan stats truncated: the peel
+        # self-joins it every phase); it sizes the loop width
+        de = scope.stage(
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .distinct(),
+            truncate=True,
+        )
         prev_de: DataFrame | None = None
         for _ in range(max_phases):
             # forward layout partitioned by src (the relax join key) and
             # pre-sorted so the per-round SMJ never re-sorts the static
             # side; backward layout = reversed edges, same discipline
-            ef = (
-                de.repartition(P, "src")
-                .sortWithinPartitions("src")
-                .localCheckpoint(eager=True)
-            )
-            eb = (
-                de.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-                .repartition(P, "src")
-                .sortWithinPartitions("src")
-                .localCheckpoint(eager=True)
+            ef = scope.leaf(de, "src")
+            eb = scope.leaf(
+                de.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                "src",
             )
             if prev_de is not None:
                 # the phase's layouts are materialized — the superseded
                 # survivor edge set is unreachable from here on
-                release_local_checkpoint(prev_de)
+                scope.release(prev_de)
                 prev_de = None
             # the forward and backward fixpoints are independent — run
             # them as concurrent jobs (guide §2.6): each round's tasks
@@ -271,8 +237,7 @@ def strongly_connected_components(
             )
             surv = lab.where(F.col("f") != F.col("b"))
             n_rem = surv.count()  # also materializes lab + assigned
-            for leaf in (ef, eb, fwd, bwd):
-                release_local_checkpoint(leaf)
+            scope.release(ef, eb, fwd, bwd)
             if n_rem == 0:
                 converged = True
                 break
@@ -314,9 +279,6 @@ def strongly_connected_components(
                     rem.select("id", F.col("id").alias("scc"))
                 )
             )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     return assigned
 
 

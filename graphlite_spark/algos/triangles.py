@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphlite_spark.checkpoint import loop_scope
+
 
 def _undirected(edges: DataFrame) -> DataFrame:
     """Distinct undirected pairs as (lo, hi), self-loops removed."""
@@ -255,13 +257,10 @@ def k_truss(
         raise ValueError("k-truss requires k >= 3 (k=2 is the whole graph)")
     from pyspark.sql import Observation
 
-    spark = edges.sparkSession
-    base = _undirected(edges).localCheckpoint(eager=True)
-    alive = base
-    prev_n = alive.count()
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with loop_scope(edges.sparkSession):
+        base = _undirected(edges).localCheckpoint(eager=True)
+        alive = base
+        prev_n = alive.count()
         for _ in range(max_rounds):
             sup = _edge_support(
                 alive.select(F.col("lo").alias("src"), F.col("hi").alias("dst")),
@@ -283,8 +282,6 @@ def k_truss(
             if n == prev_n:
                 break
             prev_n = n
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
     kept = alive.select(
         F.col("lo").alias("klo"), F.col("hi").alias("khi")
     )

@@ -34,17 +34,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphlite_spark.algos.components import symmetrize
+from graphlite_spark.checkpoint import LoopScope, loop_scope
 from graphlite_spark.functions.hashes import hash48
 
 
 def _ranked_adjacency(
     edges: DataFrame,
     undirected: bool,
-    num_partitions: int | None,
+    scope: LoopScope,
     max_degree: int | None = None,
-) -> tuple[DataFrame, DataFrame, int]:
-    """(adj, deg): adjacency ranked by dst per src (idx 0..deg-1), cached
-    hash-partitioned by src, plus the per-src degree table.
+) -> tuple[DataFrame, DataFrame]:
+    """(adj, deg): adjacency ranked by dst per src (idx 0..deg-1), as
+    sorted hash(src) leaves of ``scope``, plus the per-src degree table.
 
     ``max_degree`` (None = exact) deterministically pre-sparsifies hub
     neighborhoods: each src keeps its ``max_degree`` lowest
@@ -56,23 +57,13 @@ def _ranked_adjacency(
     not the full graph — the standard degree-capping trade large-scale
     node2vec makes so one 10^6-degree hub cannot dominate a step's
     candidate scoring."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    und = (
+    # stage the closure once; it sizes the walk loop's width unless the
+    # caller passed num_partitions
+    und = staged = scope.stage(
         symmetrize(edges).select("src", "dst")
         if undirected
         else edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
     )
-    # stage the closure once; auto-size the walk loop's shuffle width to
-    # the data (engine rule: ~100k arcs/partition) when the caller
-    # passed None — a fixed session width schedules dozens of
-    # near-empty tasks per step on small graphs
-    spark = edges.sparkSession
-    staged = und.localCheckpoint(eager=True)
-    if num_partitions is None:
-        max_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        num_partitions = max(1, min(max_p, staged.count() // 100_000 + 1))
-    und = staged
     if max_degree is not None:
         if max_degree < 1:
             raise ValueError("max_degree must be >= 1 (or None for exact)")
@@ -90,24 +81,17 @@ def _ranked_adjacency(
             .drop("hrank")
         )
     w = Window.partitionBy("src").orderBy("dst")
-    # pre-sorted checkpoint leaves: the per-step (src, idx) SMJ probes
-    # reuse the layout and order with no per-step re-sort or lineage
-    # re-analysis (release via release_local_checkpoint when done)
-    adj = (
-        und.withColumn("idx", F.row_number().over(w) - F.lit(1))
-        .repartition(num_partitions, "src")
-        .sortWithinPartitions("src", "idx")
-        .localCheckpoint(eager=True)
+    # pre-sorted leaves: the per-step (src, idx) SMJ probes reuse the
+    # layout and order with no per-step re-sort or lineage re-analysis
+    adj = scope.leaf(
+        und.withColumn("idx", F.row_number().over(w) - F.lit(1)),
+        "src", "src", "idx",
     )
-    deg = (
-        adj.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(num_partitions, "src")
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
+    deg = scope.leaf(
+        adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src"
     )
-    release_local_checkpoint(staged)
-    return adj, deg, num_partitions
+    scope.release(staged)
+    return adj, deg
 
 
 def random_walks(
@@ -132,21 +116,6 @@ def random_walks(
     returned corpus is eagerly materialized so the cached adjacency can
     be released before returning — callers reuse the result without
     holding engine-owned cache blocks alive."""
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    adj, deg, P = _ranked_adjacency(edges, undirected, num_partitions)
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
     W_ = walks_per_vertex
     cur = vertices.select(
         F.explode(F.sequence(F.lit(0), F.lit(W_ - 1))).alias("w"),
@@ -156,13 +125,8 @@ def random_walks(
         F.col("id").alias("vertex"),
     )
     out = cur.select("walk_id", F.lit(0).cast("long").alias("step"), "vertex")
-    try:
-        # loop discipline: width pinned to the data-sized P, AQE off (the
-        # step shape never changes), auto-broadcast off (leaf stats would
-        # drive a V-sized driver broadcast of deg/adj per step)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with loop_scope(edges.sparkSession, num_partitions) as scope:
+        adj, deg = _ranked_adjacency(edges, undirected, scope)
         for t in range(1, walk_length + 1):
             pick = cur.join(deg, cur["vertex"] == deg["src"]).select(
                 "walk_id",
@@ -191,11 +155,6 @@ def random_walks(
                 cur = cur.localCheckpoint(eager=False)
                 out = out.localCheckpoint(eager=False)
         out = out.localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        release_local_checkpoint(adj)
-        release_local_checkpoint(deg)
     return out
 
 
@@ -249,27 +208,10 @@ def node2vec_walks(
     the uniform first step (step-1 rows are always emitted)."""
     if walk_length < 1 or walks_per_vertex < 1:
         raise ValueError("walk_length and walks_per_vertex must be >= 1")
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
-    adj, deg, P = _ranked_adjacency(
-        edges, undirected, num_partitions, max_degree=max_degree
-    )
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with loop_scope(edges.sparkSession, num_partitions) as scope:
+        adj, deg = _ranked_adjacency(
+            edges, undirected, scope, max_degree=max_degree
+        )
         W_ = walks_per_vertex
         start = vertices.select(
             F.explode(F.sequence(F.lit(0), F.lit(W_ - 1))).alias("w"),
@@ -340,11 +282,6 @@ def node2vec_walks(
                 cur = cur.localCheckpoint(eager=False)
                 out = out.localCheckpoint(eager=False)
         out = out.localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        release_local_checkpoint(adj)
-        release_local_checkpoint(deg)
     return out
 
 
@@ -383,9 +320,6 @@ def metapath_walks(
     ``checkpoint_every`` steps (the repo's linear-loop discipline)."""
     if not metapath:
         raise ValueError("metapath must be non-empty")
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    spark = edges.sparkSession
     und = (
         symmetrize(edges).select("src", "dst")
         if undirected
@@ -397,44 +331,20 @@ def metapath_walks(
     typed = und.join(ty, und["dst"] == ty["tid"]).select(
         "src", "dst", F.col("vtype").alias("dtype")
     )
-    # staged typed closure: data-sized width + pre-sorted leaves, the
-    # walks-family discipline (see _ranked_adjacency)
-    staged = typed.localCheckpoint(eager=True)
-    P = num_partitions
-    if P is None:
-        max_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        P = max(1, min(max_p, staged.count() // 100_000 + 1))
     w = Window.partitionBy("src", "dtype").orderBy("dst")
-    adj = (
-        staged.withColumn("idx", F.row_number().over(w) - F.lit(1))
-        .repartition(P, "src")
-        .sortWithinPartitions("src", "dtype", "idx")
-        .localCheckpoint(eager=True)
-    )
-    degt = (
-        adj.groupBy("src", "dtype")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(P, "src")
-        .sortWithinPartitions("src", "dtype")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(staged)
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
+    with loop_scope(edges.sparkSession, num_partitions) as scope:
+        # staged typed closure: data-sized width + pre-sorted leaves, the
+        # walks-family discipline (see _ranked_adjacency)
+        staged = scope.stage(typed)
+        adj = scope.leaf(
+            staged.withColumn("idx", F.row_number().over(w) - F.lit(1)),
+            "src", "src", "dtype", "idx",
+        )
+        degt = scope.leaf(
+            adj.groupBy("src", "dtype").agg(F.count(F.lit(1)).alias("deg")),
+            "src", "src", "dtype",
+        )
+        scope.release(staged)
         W_ = walks_per_vertex
         L = len(metapath)
         starts = vertices.select("id").join(
@@ -481,9 +391,4 @@ def metapath_walks(
                 cur = cur.localCheckpoint(eager=False)
                 out = out.localCheckpoint(eager=False)
         out = out.localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        release_local_checkpoint(adj)
-        release_local_checkpoint(degt)
     return out

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphlite_spark.algos.components import symmetrize
+from graphlite_spark.checkpoint import loop_scope
 from graphlite_spark.functions.hashes import hash48
 
 
@@ -36,14 +37,11 @@ def wl_refinement(
     """(id, color) — the 1-WL color of every vertex after ``iterations``
     refinement rounds from a uniform start (round 1 therefore encodes
     degree, round 2 degree-of-neighbors, ...)."""
-    spark = edges.sparkSession
-    und = symmetrize(edges).select("src", "dst").persist()
-    state = vertices.select(
-        "id", hash48(F.lit("wl:0")).alias("color")
-    ).localCheckpoint(eager=False)
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.own(symmetrize(edges).select("src", "dst").persist())
+        state = vertices.select(
+            "id", hash48(F.lit("wl:0")).alias("color")
+        ).localCheckpoint(eager=False)
         for _ in range(iterations):
             nbr = (
                 und.join(
@@ -80,9 +78,6 @@ def wl_refinement(
                 .localCheckpoint(eager=False)
             )
         state.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        und.unpersist()
     return state
 
 

@@ -28,9 +28,11 @@ from __future__ import annotations
 import json
 import os
 import time
+import warnings
+from contextlib import contextmanager
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 STATE_COLS = ["id", "out_degree", "value", "active", "send"]
@@ -88,18 +90,190 @@ def truncate_plan(df: DataFrame, eager: bool = False) -> DataFrame:
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
-    """Free the blocks of an eagerly ``localCheckpoint``-ed DataFrame.
+    """Free the blocks of an eagerly ``localCheckpoint``-ed DataFrame, of a
+    :func:`truncate_plan` rebuild of one, or of a projection of either.
 
     ``unpersist()`` is a no-op for checkpointed frames (they are not in
     the CacheManager); the storage is reachable through the analyzed
-    ``LogicalRDD``'s RDD handle.  After release the frame is NOT usable
-    (checkpoint blocks cannot be recomputed) — call only when every
-    consumer has been materialized.  Falls back to leaving the blocks to
-    the ContextCleaner on non-classic backends (Spark Connect)."""
+    ``LogicalRDD``'s RDD handle — for a rebuild or projection, down the
+    one-to-one dependency chain of its RDD.  After release the frame is
+    NOT usable (checkpoint blocks cannot be recomputed) — call only when
+    every consumer has been materialized.  A frame with no blocks under
+    it (a file scan, a shuffle output) is left alone.  Falls back to
+    leaving the blocks to the ContextCleaner on non-classic backends
+    (Spark Connect), warning once per process so a release that never
+    happens stays visible."""
+    global _release_warned
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+        qe = df._jdf.queryExecution()
+        plan = qe.analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            rdd = plan.rdd()
+        elif plan.children().isEmpty():
+            return
+        else:
+            rdd = qe.toRdd()
+        while not rdd.getStorageLevel().isValid():
+            deps = rdd.dependencies()
+            if deps.size() != 1 or (
+                deps.head().getClass().getSimpleName() != "OneToOneDependency"
+            ):
+                return
+            rdd = deps.head().rdd()
+        rdd.unpersist(False)
+    except Exception as exc:
+        if not _release_warned:
+            _release_warned = True
+            warnings.warn(
+                "release_local_checkpoint: could not free checkpoint blocks "
+                f"({type(exc).__name__}: {exc}); leaving them to the "
+                "ContextCleaner",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+
+
+_release_warned = False
+
+#: session settings every iterative loop pins, saved and restored by
+#: :func:`loop_scope`
+LOOP_CONF = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.shuffle.partitions",
+)
+
+#: loop width rule: ~100k rows per partition, capped at the session's
+#: shuffle width (at cluster scale pass ``num_partitions`` ≈ E / 5M)
+ROWS_PER_PARTITION = 100_000
+
+
+class LoopScope:
+    """Handle yielded by :func:`loop_scope`: sizes the loop's shuffle
+    width once and owns every frame it stages, so the scope's exit can
+    release them all."""
+
+    def __init__(self, spark: SparkSession, num_partitions: int | None,
+                 session_width: int):
+        self.spark = spark
+        #: the loop's shuffle width; None until the first stage/leaf
+        self.num_partitions = num_partitions
+        #: row count of the most recently staged frame
+        self.rows: int | None = None
+        self._session_width = session_width
+        self._owned: list[DataFrame] = []
+
+    def size(self, rows: int) -> int:
+        """Fix the width from a row count (first call only) and pin it."""
+        if self.num_partitions is None:
+            self.num_partitions = max(
+                1, min(self._session_width, rows // ROWS_PER_PARTITION + 1)
+            )
+            self.spark.conf.set(
+                "spark.sql.shuffle.partitions", str(self.num_partitions)
+            )
+        return self.num_partitions
+
+    def own(self, df: DataFrame) -> DataFrame:
+        """Register a checkpointed or persisted frame for release at exit."""
+        self._owned.append(df)
+        return df
+
+    def release(self, *dfs: DataFrame) -> None:
+        """Free frames now, owned or not (every consumer must be
+        materialized), and drop them from the exit's release list."""
+        for df in dfs:
+            if df.is_cached:
+                df.unpersist()
+            else:
+                release_local_checkpoint(df)
+            self._owned = [o for o in self._owned if o is not df]
+
+    def stage(self, df: DataFrame, truncate: bool = False) -> DataFrame:
+        """Eagerly checkpoint ``df`` (``truncate``: via
+        :func:`truncate_plan`, for self-joining loops) and size the width
+        from its row count — the count rides the checkpoint's own job as
+        an observed metric, so staging costs one job."""
+        obs = Observation()
+        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        staged = (
+            truncate_plan(observed, eager=True) if truncate
+            else observed.localCheckpoint(eager=True)
+        )
+        self.own(staged)
+        self.rows = int(obs.get["n"] or 0)
+        self.size(self.rows)
+        return staged
+
+    def leaf(self, df: DataFrame, key: str, *order: str) -> DataFrame:
+        """The loop's static side: ``df`` hash-partitioned by ``key`` at
+        the loop width, sorted by ``order`` (default ``key``) and eagerly
+        checkpointed.  The checkpoint keeps partitioning and sort order,
+        so each round's join on ``key`` needs no exchange or sort on this
+        side, and the leaf plan stops Catalyst re-analyzing the caller's
+        lineage every round.  Stages ``df`` first when the width is not
+        sized yet (counting a staged copy, not the caller's plan)."""
+        staged = None
+        if self.num_partitions is None:
+            df = staged = self.stage(df)
+        leaf = self.own(
+            df.repartition(self.num_partitions, key)
+            .sortWithinPartitions(*(order or (key,)))
+            .localCheckpoint(eager=True)
+        )
+        if staged is not None:
+            self.release(staged)
+        return leaf
+
+
+@contextmanager
+def loop_scope(spark: SparkSession, num_partitions: int | None = None,
+               broadcast: bool = False):
+    """Session settings and frame ownership for one iterative loop.
+
+    Entry saves :data:`LOOP_CONF` and turns AQE and auto-broadcast off:
+    AQE re-plans every round's identical query shape, and the tiny
+    statistics of checkpointed loop frames would make Catalyst broadcast
+    the V-sized state into every round's joins (each round's planning
+    then blocks on a driver-side collect — the measured Pregel-loop
+    pathology; an explicit ``F.broadcast`` hint still broadcasts).
+    ``broadcast=True`` keeps the session's auto-broadcast threshold, for
+    loops that join a small per-round frame against an edge set that is
+    not co-partitioned with it (BFS frontiers, maximal matching).  The
+    shuffle width is pinned to ``num_partitions`` now, or sized from the
+    data by the first :meth:`LoopScope.stage` / :meth:`LoopScope.leaf`
+    (``max(1, min(session width, rows // 100_000 + 1))``).
+
+    Exit releases every frame the scope owns and restores the saved
+    settings — nested scopes restore their enclosing scope's values.  If
+    the body raises, every RDD persisted since entry is unpersisted too
+    (a failed eager checkpoint registers one nobody holds), assuming, as
+    the session-wide settings already do, that no other thread creates
+    persistent RDDs in this session meanwhile."""
+    saved = {k: spark.conf.get(k) for k in LOOP_CONF}
+    jsc = spark.sparkContext._jsc
+    first_rdd = jsc.sc().newRddId()
+    scope = LoopScope(
+        spark, num_partitions, int(saved["spark.sql.shuffle.partitions"])
+    )
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        if not broadcast:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        if num_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
+        yield scope
+    except BaseException:
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid > first_rdd:
+                rdd.unpersist(False)
+        # swept above; cached frames still need their CacheManager entry
+        scope._owned = [df for df in scope._owned if df.is_cached]
+        raise
+    finally:
+        scope.release(*scope._owned)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 class LocalCheckpointer:

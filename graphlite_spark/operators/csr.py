@@ -184,13 +184,13 @@ class CSRPregelEngine(PregelEngine):
         P = self.num_partitions
         if hub is not None:
             deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-            self._hub_ids = (
+            self._hub_ids = self._scope.own(
                 deg.where(F.col("d") > hub).select(F.col("src").alias("id"))
                 .persist()
             )
-            self._owned.append(self._hub_ids)
-        self._csr = build_csr_blocks(e, P, hub_ids=self._hub_ids).persist()
-        self._owned.append(self._csr)
+        self._csr = self._scope.own(
+            build_csr_blocks(e, P, hub_ids=self._hub_ids).persist()
+        )
         self._csr.count()  # build once, reuse every superstep
         return state, e
 

@@ -52,6 +52,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from graphlite_spark.checkpoint import loop_scope, release_local_checkpoint
+
 
 def _coerce_aggr(v):
     """Driver-side aggregator value: numeric merges stay floats (the
@@ -249,10 +251,6 @@ class PregelEngine:
         to eager ``localCheckpoint`` each superstep.
     """
 
-    #: auto-partitioning target (local mode; at cluster scale pass
-    #: num_partitions explicitly, ~E / 5M)
-    TARGET_EDGES_PER_PARTITION = 100_000
-
     def __init__(self, num_partitions: int | None = None, checkpointer=None,
                  run_id: str = "run0", hub_threshold: int | None = None,
                  validate_point_sends: bool = False):
@@ -280,12 +278,9 @@ class PregelEngine:
         self.validate_point_sends = validate_point_sends
         self._hub_edges: DataFrame | None = None
         self._hub_ids: DataFrame | None = None
-        #: engine-owned persisted frames, released at the end of run()
-        self._owned: list[DataFrame] = []
-        #: engine-owned eagerly-localCheckpointed frames; their blocks are
-        #: released via the LogicalRDD handle (unpersist() is a no-op for
-        #: checkpointed frames — they are not in the CacheManager)
-        self._owned_ckpt: list[DataFrame] = []
+        #: the running loop's :class:`~graphlite_spark.checkpoint.LoopScope`
+        #: — owns the edge leaf and hub frames, released when run() exits
+        self._scope = None
 
     def _truncate(self, df: DataFrame, superstep: int, aggr: dict[str, float]) -> DataFrame:
         if self.checkpointer is not None:
@@ -353,76 +348,35 @@ class PregelEngine:
                 algo: PregelAlgorithm) -> tuple[DataFrame, DataFrame]:
         """Build (state, edges) — degrees attached, co-hash-partitioned.
 
-        Edges are partitioned by ``src`` and cached once (they are immutable
-        across supersteps — the reference loads them once into a packed CSR,
-        Worker.cc:303-322); vertex state is partitioned by ``id`` so the
-        scatter join and the update join both shuffle only the small side.
+        Edges are partitioned by ``src`` and checkpointed once (they are
+        immutable across supersteps — the reference loads them once into a
+        packed CSR, Worker.cc:303-322); vertex state is partitioned by
+        ``id`` so the scatter join and the update join both shuffle only
+        the small side.  Runs inside :meth:`run`'s loop scope, which sizes
+        ``num_partitions`` from the edge count when it is None.
         """
         e = edges.select("src", "dst", F.col("weight").cast("double").alias("weight"))
-        P = self.num_partitions
-        # eager localCheckpoint instead of persist(): same storage (the
-        # blocks live in MEMORY_AND_DISK either way), same preserved
-        # hash(src, P) partitioning, but the per-superstep plan then
-        # carries a LEAF (LogicalRDD) instead of the caller's full edge
-        # derivation tree (symmetrize/distinct/window lineage down to the
-        # parquet scan) — which Catalyst re-analyzed on EVERY superstep
-        # before cache substitution (~30-40 ms/superstep measured at
-        # sf0.1; grows with the caller's plan).  Blocks are released in
-        # run()'s finally via the LogicalRDD handle.
-        if P is None:
-            # auto-size: ~TARGET_EDGES_PER_PARTITION edges per partition,
-            # capped at the session's shuffle parallelism.  At 100 TB the
-            # same rule gives P ≈ E / 5M; here it keeps tiny graphs from
-            # paying 32 partitions of per-task overhead every superstep.
-            # Stage the checkpoint BEFORE counting: a bare e.count() would
-            # execute the caller's whole edge tree (symmetrize/distinct is
-            # a full shuffle) once for the count and once more for the
-            # checkpoint — counting the staged blocks is a cheap scan.
-            staged = e.localCheckpoint(eager=True)
-            n_e = staged.count()
-            max_p = int(
-                edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-            P = max(1, min(max_p, n_e // self.TARGET_EDGES_PER_PARTITION + 1))
-            self.num_partitions = P
-            # sortWithinPartitions("src"): the checkpointed LogicalRDD
-            # preserves outputOrdering as well as partitioning, so the
-            # per-superstep scatter SMJ stops re-sorting the IMMUTABLE
-            # edge table every superstep (plan audit: a Sort node over
-            # the full edge scan inside every superstep's stage; the
-            # state side already rides sorted out of the previous
-            # superstep's join).  One sort at prepare time, zero per
-            # superstep — at 100 TB that is an O(E log E) per-superstep
-            # term gone.
-            e = (
-                staged.repartition(P, "src")
-                .sortWithinPartitions("src")
-                .localCheckpoint(eager=True)
-            )
-            from graphlite_spark.checkpoint import release_local_checkpoint
-
-            release_local_checkpoint(staged)
-        else:
-            e = (
-                e.repartition(P, "src")
-                .sortWithinPartitions("src")
-                .localCheckpoint(eager=True)
-            )
-        self._owned_ckpt.append(e)
+        # the scope's sorted leaf: the per-superstep plan carries a
+        # LogicalRDD instead of the caller's edge derivation tree (which
+        # Catalyst re-analyzed every superstep, ~30-40 ms at sf0.1), and
+        # the preserved sort order keeps the scatter SMJ from re-sorting
+        # the immutable edge table every superstep
+        e = self._scope.leaf(e, "src")
+        P = self.num_partitions = self._scope.num_partitions
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
         if self.hub_threshold is not None:
-            self._hub_ids = (
+            own = self._scope.own
+            self._hub_ids = own(
                 deg.where(F.col("out_degree") > self.hub_threshold)
                 .select(F.col("src").alias("id"))
                 .persist()
             )
-            self._hub_edges = e.join(
+            self._hub_edges = own(e.join(
                 self._hub_ids, e["src"] == self._hub_ids["id"], "left_semi"
-            ).persist()
-            e = e.join(
+            ).persist())
+            e = own(e.join(
                 self._hub_ids, e["src"] == self._hub_ids["id"], "left_anti"
-            ).persist()
-            self._owned += [self._hub_ids, self._hub_edges, e]
+            ).persist())
         # an optional ``init_value`` vertex column rides into init_value()
         # expressions (warm-start programs); dropped from the state after
         extra = [c for c in ("init_value",) if c in vertices.columns]
@@ -435,9 +389,7 @@ class PregelEngine:
                 F.coalesce("out_degree", F.lit(0)).cast("long").alias("out_degree"),
             )
         )
-        if P:
-            state = state.repartition(P, "id")
-        state = state.select(
+        state = state.repartition(P, "id").select(
             "id",
             "out_degree",
             algo.init_value().cast(algo.value_type).alias("value"),
@@ -453,51 +405,18 @@ class PregelEngine:
         resume_from: tuple[DataFrame, int, dict[str, float]] | None = None,
     ) -> PregelResult:
         spark = edges.sparkSession
-        # Loop-scoped tuning: AQE re-plans every superstep's (identical)
-        # query shape — pure overhead in an iterative driver — and the
-        # shuffle width should match the graph-sized partition count, not
-        # the session default.  Both restored after the run.
-        saved = {
-            "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-            "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-            "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold"
-            ),
-        }
-        try:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            # The checkpointed state keeps the optimized plan's tiny
-            # sizeInBytes (LogicalRDD originStats), so Catalyst would pick a
-            # BroadcastHashJoin for the scatter and inbox joins — and each
-            # superstep's plan-to-RDD step then BLOCKS building a broadcast
-            # (collect V-sized state through the driver, ship to every task)
-            # before the superstep job even starts.  Measured via driver
-            # thread dumps: the loop sat in BroadcastExchangeExec
-            # .doExecuteBroadcast most supersteps.  State, edges and inbox
-            # are co-hash-partitioned on the join keys already, so the
-            # shuffle-free SMJ/SHJ path is strictly better — and at 10^12
-            # vertices a per-superstep driver collect is fatal, not slow.
-            # The hub-split scatter's explicit F.broadcast() hint (few hub
-            # states by construction) still forces its broadcast.
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            result = self._run_loop(vertices, edges, algo, resume_from, spark)
-        finally:
-            for k, v in saved.items():
-                spark.conf.set(k, v)
-            # release engine-owned caches: the result state is already
-            # lineage-truncated (localCheckpoint / durable round-trip), so
-            # nothing the caller holds depends on these blocks — without
-            # this, repeated runs in one session (bench runs 4+ engines)
-            # accumulate cached edge tables until storage eviction thrashes
-            for df in self._owned:
-                df.unpersist()
-            self._owned.clear()
-            from graphlite_spark.checkpoint import release_local_checkpoint
-
-            for df in self._owned_ckpt:
-                release_local_checkpoint(df)
-            self._owned_ckpt.clear()
-        return result
+        # the scope pins AQE and auto-broadcast off (state, edges and inbox
+        # are co-hash-partitioned on the join keys, so the shuffle-free
+        # SMJ path beats a per-superstep driver broadcast of the state; the
+        # hub split's explicit F.broadcast hint still broadcasts) and, on
+        # exit, frees the edge leaf and hub frames: the result state is
+        # already lineage-truncated, so nothing the caller holds needs them
+        with loop_scope(spark, self.num_partitions) as scope:
+            self._scope = scope
+            try:
+                return self._run_loop(vertices, edges, algo, resume_from, spark)
+            finally:
+                self._scope = None
 
     def _run_loop(
         self,
@@ -508,7 +427,6 @@ class PregelEngine:
         spark,
     ) -> PregelResult:
         state, e = self.prepare(vertices, edges, algo)
-        spark.conf.set("spark.sql.shuffle.partitions", str(self.num_partitions))
         aggr = dict(algo.aggr_init)
         start_step = 0
         inbox: DataFrame | None = None
@@ -663,8 +581,6 @@ class PregelEngine:
             # which is what delivers the observed metrics read next.
             new_state = self._truncate(observed, superstep, aggr)
             if prev_owned is not None:
-                from graphlite_spark.checkpoint import release_local_checkpoint
-
                 release_local_checkpoint(prev_owned)
             prev_owned = new_state
             pm = algo.point_messages(new_state, superstep, aggr_in)

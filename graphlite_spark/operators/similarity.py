@@ -2393,111 +2393,97 @@ def dbscan_labels(
     )
     # loop discipline: the 16 propagation rounds shuffle a core graph
     # of ~N*k rows at most — size the width to that, not the session
-    # default (most of the wall was near-empty tasks per round), and
-    # pin AQE off around the fixed-shape rounds
-    spark = embeddings.sparkSession
-    n_vec = q.count()
-    max_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    P = max(1, min(max_p, n_vec * knn_k // 100_000 + 1))
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    c = q.select(F.col("id").alias("nid"), F.col("qv").alias("cv"))
-    d2 = (
-        q.join(F.broadcast(c), F.col("id") != F.col("nid"))
-        .select(
-            "id", "nid",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"), F.col("cv"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    w = Window.partitionBy("id").orderBy(
-        F.col("d2").asc(), F.col("nid").asc()
-    )
-    kd = (
-        d2.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") == knn_k)
-        .select("id", F.col("d2").alias("kdist"))
-    )
-    wm = Window.orderBy(F.col("kdist").asc(), F.col("id").asc())
-    eps = (
-        kd.withColumn("rn", F.row_number().over(wm))
-        .crossJoin(
-            F.broadcast(
-                kd.agg(F.count(F.lit(1)).cast("long").alias("n"))
-            )
-        )
-        .where(F.col("rn") == F.expr("(n + n % 2) div 2"))
-        .select(F.col("kdist").alias("eps_sq"))
-    )
-    near = d2.crossJoin(F.broadcast(eps)).where(
-        F.col("d2") <= F.col("eps_sq")
-    ).select("id", "nid")
-    core = (
-        near.groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("nn"))
-        .where(F.col("nn") >= min_pts - 1)
-        .select("id")
-    )
-    ce = (
-        near.join(core, "id", "left_semi")
-        .join(
-            core.select(F.col("id").alias("nid")), "nid", "left_semi"
-        )
-        .localCheckpoint(eager=False)
-    )
-    lab = core.select("id", F.col("id").alias("label")).localCheckpoint(
-        eager=False
-    )
-    for _ in range(rounds):
-        gathered = (
-            ce.join(
-                lab.select(
-                    F.col("id").alias("nid"), F.col("label").alias("nl")
-                ),
-                "nid",
-            )
-            .groupBy("id")
-            .agg(F.min("nl").alias("ml"))
-        )
-        lab = (
-            lab.join(gathered, "id", "left")
+    # default (most of the wall was near-empty tasks per round)
+    from graphlite_spark.checkpoint import loop_scope, truncate_plan
+
+    with loop_scope(embeddings.sparkSession) as scope:
+        scope.size(q.count() * knn_k)
+        c = q.select(F.col("id").alias("nid"), F.col("qv").alias("cv"))
+        d2 = (
+            q.join(F.broadcast(c), F.col("id") != F.col("nid"))
             .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("ml", F.col("label"))
-                ).alias("label"),
+                "id", "nid",
+                F.aggregate(
+                    F.zip_with(
+                        F.col("qv"), F.col("cv"),
+                        lambda a, b: (a - b) * (a - b),
+                    ),
+                    F.lit(0).cast("long"),
+                    lambda acc, x: acc + x,
+                ).alias("d2"),
             )
             .localCheckpoint(eager=False)
         )
-    border = (
-        near.join(core.select(F.col("id")), "id", "left_anti")
-        .join(
-            lab.select(F.col("id").alias("nid"), "label"), "nid"
+        w = Window.partitionBy("id").orderBy(
+            F.col("d2").asc(), F.col("nid").asc()
         )
-        .groupBy("id")
-        .agg(F.min("label").alias("blabel"))
-    )
-    allv = q.select("id")
-    try:
+        kd = (
+            d2.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") == knn_k)
+            .select("id", F.col("d2").alias("kdist"))
+        )
+        wm = Window.orderBy(F.col("kdist").asc(), F.col("id").asc())
+        eps = (
+            kd.withColumn("rn", F.row_number().over(wm))
+            .crossJoin(
+                F.broadcast(
+                    kd.agg(F.count(F.lit(1)).cast("long").alias("n"))
+                )
+            )
+            .where(F.col("rn") == F.expr("(n + n % 2) div 2"))
+            .select(F.col("kdist").alias("eps_sq"))
+        )
+        near = d2.crossJoin(F.broadcast(eps)).where(
+            F.col("d2") <= F.col("eps_sq")
+        ).select("id", "nid")
+        core = (
+            near.groupBy("id")
+            .agg(F.count(F.lit(1)).cast("long").alias("nn"))
+            .where(F.col("nn") >= min_pts - 1)
+            .select("id")
+        )
+        ce = (
+            near.join(core, "id", "left_semi")
+            .join(
+                core.select(F.col("id").alias("nid")), "nid", "left_semi"
+            )
+            .localCheckpoint(eager=False)
+        )
+        lab = core.select("id", F.col("id").alias("label")).localCheckpoint(
+            eager=False
+        )
+        for _ in range(rounds):
+            gathered = (
+                ce.join(
+                    lab.select(
+                        F.col("id").alias("nid"), F.col("label").alias("nl")
+                    ),
+                    "nid",
+                )
+                .groupBy("id")
+                .agg(F.min("nl").alias("ml"))
+            )
+            lab = (
+                lab.join(gathered, "id", "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("label"), F.coalesce("ml", F.col("label"))
+                    ).alias("label"),
+                )
+                .localCheckpoint(eager=False)
+            )
+        border = (
+            near.join(core.select(F.col("id")), "id", "left_anti")
+            .join(
+                lab.select(F.col("id").alias("nid"), "label"), "nid"
+            )
+            .groupBy("id")
+            .agg(F.min("label").alias("blabel"))
+        )
+        allv = q.select("id")
         # materialize inside the pinned-conf scope (truncate_plan keeps
         # the checkpointed rounds' lineage out of the caller's plan)
-        from graphlite_spark.checkpoint import truncate_plan
-
         return truncate_plan(
             allv.join(
                 core.select("id", F.lit(1).alias("is_core")), "id", "left"
@@ -2515,6 +2501,3 @@ def dbscan_labels(
             ),
             eager=True,
         )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)

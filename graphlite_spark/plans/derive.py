@@ -148,9 +148,13 @@ def _exclusive_conv_offsets(
         # sample + exchange + stats collect + second checkpoint — three
         # driver round-trips — with one collect.  Key order: the keys
         # are the engine's ASCII 'conv%08d' ids, for which Python's
-        # code-point sort equals Spark's UTF8 binary ordering.  The
-        # distributed path below remains the >2M route.
-        rows = sorted(cnts.collect(), key=lambda r: r[key])
+        # code-point sort equals Spark's UTF8 binary ordering, and a NULL
+        # key (a NULL user_id formats to one) sorts first, as Spark's
+        # ascending order does.  The distributed path below remains the
+        # >2M route.
+        rows = sorted(
+            cnts.collect(), key=lambda r: (r[key] is not None, r[key])
+        )
         data, acc = [], 0
         for r in rows:
             data.append((r[key], acc))

@@ -137,8 +137,10 @@ def transcripts_from_events(events: DataFrame) -> DataFrame:
     ``__spark_entry__.oracle_sql``):
 
     * ``conv_id``  = ``format('conv%08d', user_id)``
-    * ``turn_idx`` = ``row_number() over (partition by user_id
-      order by ts, event_id) - 1``  (stable turn ordering)
+    * ``turn_idx`` = ``row_number() over (partition by conv_id
+      order by ts, event_id) - 1``  (stable turn ordering; the oracle
+      partitions by user_id, which is the same partition because the
+      conv_id format is injective on int ids)
     * ``tool``     = ``event_type`` when it is ``purchase``/``error``
       (tool-ish actions), else null
     * ``role``     = 'tool' when tool is set, else user/assistant by parity
@@ -152,6 +154,9 @@ def transcripts_from_events(events: DataFrame) -> DataFrame:
     # (dense-id window, per-conversation edge windows, conv groupBys) keys
     # on conv_id, and hanging the one required hash exchange on that
     # column lets all of them ride it instead of re-shuffling.
+    # user_id must fit an int: under Spark's default ANSI mode the cast
+    # raises ArithmeticException on an out-of-range id instead of
+    # wrapping it into another user's conversation.
     base = events.select(
         F.format_string("conv%08d", F.col("user_id").cast("int")).alias("conv_id"),
         "event_type",
