@@ -2393,10 +2393,13 @@ def dbscan_labels(
     )
     # loop discipline: the 16 propagation rounds shuffle a core graph
     # of ~N*k rows at most — size the width to that, not the session
-    # default (most of the wall was near-empty tasks per round)
+    # default (most of the wall was near-empty tasks per round).
+    # broadcast=True: the small core/label frames are joined against the
+    # distance table every round; shuffling them instead measured 1.17x
+    # the wall at sf0.001
     from graphlite_spark.checkpoint import loop_scope, truncate_plan
 
-    with loop_scope(embeddings.sparkSession) as scope:
+    with loop_scope(embeddings.sparkSession, broadcast=True) as scope:
         scope.size(q.count() * knn_k)
         c = q.select(F.col("id").alias("nid"), F.col("qv").alias("cv"))
         d2 = (
