@@ -11,7 +11,7 @@ Subpackages
 -----------
 sources/    transcripts generator, events->transcripts adapter, tinygraph
 plans/      transcripts -> (vertices, edges) derivation
-operators/  pregel driver, per-partition CSR kernels, dedup, similarity
+operators/  pregel driver, dedup, similarity
 algos/      pagerank, connected components, label propagation, triangles
 functions/  text analysis + shared hash expressions (Spark/DuckDB-identical)
 streaming/  structured-streaming ingestion of transcripts

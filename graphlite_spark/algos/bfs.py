@@ -64,13 +64,6 @@ class BFS(PregelAlgorithm):
     def message(self, superstep: int, aggr: dict[str, float]) -> Column:
         return F.col("value") + 1
 
-    # CSR kernel hooks
-    reduce_kind = "min"
-    msg_dtype = "int64"
-
-    def message_numpy(self, values, out_degree, superstep, aggr):
-        return values + 1
-
 
 def bfs(
     vertices: DataFrame,

@@ -75,13 +75,6 @@ class ConnectedComponents(PregelAlgorithm):
     def message(self, superstep: int, aggr: dict[str, float]) -> Column:
         return F.col("value")
 
-    # vectorized kernel hooks for the CSR engine (operators/csr.py)
-    reduce_kind = "min"
-    msg_dtype = "int64"
-
-    def message_numpy(self, values, out_degree, superstep, aggr):
-        return values
-
 
 def connected_components_fast(
     vertices: DataFrame,

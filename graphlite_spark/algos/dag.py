@@ -25,9 +25,8 @@ and the engine's loud PARTIAL warning), so the bounded form is the
 oracle-checked query.
 
 Scale shape: identical to BFS — one scatter join + one map-side-combined
-max per superstep; the CSR engine pre-combines per destination inside
-the kernel (reduce_kind="max"), so a 10^5-in-degree sink receives at
-most P partials, never its raw inbox.
+max per superstep, so a 10^5-in-degree sink receives at most P partials,
+never its raw inbox.
 """
 
 from __future__ import annotations
@@ -74,13 +73,6 @@ class DagLayers(PregelAlgorithm):
 
     def message(self, superstep: int, aggr: dict[str, float]) -> Column:
         return F.col("value") + 1
-
-    # CSR kernel hooks
-    reduce_kind = "max"
-    msg_dtype = "int64"
-
-    def message_numpy(self, values, out_degree, superstep, aggr):
-        return values + 1
 
 
 def dag_layers(

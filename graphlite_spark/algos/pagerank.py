@@ -80,13 +80,6 @@ class PageRank(PregelAlgorithm):
     def message(self, superstep: int, aggr: dict[str, float]) -> Column:
         return F.col("value") / F.col("out_degree")
 
-    # vectorized kernel hooks for the CSR engine (operators/csr.py)
-    reduce_kind = "sum"
-    msg_dtype = "float64"
-
-    def message_numpy(self, values, out_degree, superstep, aggr):
-        return values / out_degree
-
     def aggregators(self, superstep: int, aggr: dict[str, float]) -> dict[str, Column]:
         if superstep == 0 or self._halted_branch(superstep, aggr):
             # ss0 never accumulates (PageRankVertex.cc:149-150 path);

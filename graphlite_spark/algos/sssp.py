@@ -136,16 +136,6 @@ class SSSPWithParents(PregelAlgorithm):
             F.col("value").getField("dist") + F.col("weight"), F.col("id")
         )
 
-    # vectorized kernel hooks for the CSR engine's STRUCT path
-    # (operators/csr.py): per-edge (dist + weight, sender) messages,
-    # lexicographic-min pre-combine == F.min over the struct
-    reduce_kind = "min_struct"
-    struct_fields = [("dist", "float64"), ("parent", "int64")]
-
-    def message_numpy_edges(self, sender_ids, fields, out_degree, weights,
-                            superstep, aggr):
-        return {"dist": fields["dist"] + weights, "parent": sender_ids}
-
 
 def sssp_with_parents(
     vertices: DataFrame,

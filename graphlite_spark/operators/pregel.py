@@ -52,7 +52,11 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import loop_scope, release_local_checkpoint
+from graphlite_spark.checkpoint import (
+    LoopScope,
+    loop_scope,
+    release_local_checkpoint,
+)
 
 
 def _coerce_aggr(v):
@@ -164,18 +168,21 @@ class PregelAlgorithm:
         (include/Vertex.h:226-228, routed by Node.cc:103-137).  Return
         (dst, msg) rows derived from the post-compute state (columns: id,
         value, out_degree, active, send, participate, has_msg, old_value),
-        or None.  Unioned with the edge scatter before combining."""
+        or None.  Unioned with the edge scatter before combining.  A
+        program that returns rows must also declare
+        :meth:`point_sent_count`; the engine raises ``ValueError`` if it
+        does not."""
         return None
 
     def point_sent_count(self, superstep: int, aggr: dict) -> Column | None:
         """Per-vertex count of point messages this vertex sends at this
-        superstep (same column vocabulary as :meth:`aggregators`).  When
-        provided, the engine folds Σ(point_sent_count) into the single
-        per-superstep stats action — keeping the one-action-per-superstep
-        invariant for point-send programs; when None (default) the engine
-        falls back to materializing and counting the point-message frame
-        (a second action).  Must equal the row count
-        :meth:`point_messages` produces for the same superstep."""
+        superstep (same column vocabulary as :meth:`aggregators`).  The
+        engine folds Σ(point_sent_count) into the single per-superstep
+        stats action, so the sends count toward termination without a
+        second action.  Required whenever :meth:`point_messages` returns
+        rows; must equal the row count it produces for the same
+        superstep.  None (the default) is only valid for programs that
+        send no point messages."""
         return None
 
     def combine(self, msgs: DataFrame) -> DataFrame:
@@ -254,21 +261,16 @@ class PregelEngine:
     def __init__(self, num_partitions: int | None = None, checkpointer=None,
                  run_id: str = "run0", hub_threshold: int | None = None,
                  validate_point_sends: bool = False):
-        """``hub_threshold``: out-degree above which a vertex is treated as
-        a hub for skew handling.  A hub's edges all hash to one partition
-        (edges are partitioned by src, the reference's placement), so one
-        task would own the whole hub adjacency; the engine splits the
-        scatter into (non-hub shuffle join) ∪ (broadcast join of the few
-        hub states against the hub edge block) — the hub side never
-        shuffles.  The reference has no skew handling at all (static
-        modulo placement only, SURVEY.md §4.2); the north rule requires
-        it.  The *gather* needs no salting for algebraic combines: Spark's
-        map-side partial aggregation bounds any reducer at <= P partials
-        per key (and LPA's mode combine is already two-stage)."""
+        """``hub_threshold`` is accepted and ignored: the frozen
+        ``bench.py --skew-only`` still passes it.  The broadcast hub split
+        it once switched on lost to the plain join on every graph it was
+        measured on (BENCH.md), so it is deleted; the gather needs no
+        salting either, since map-side partial aggregation bounds any
+        reducer at <= P partials per key (LPA's mode combine is two-stage
+        too)."""
         self.num_partitions = num_partitions
         self.checkpointer = checkpointer
         self.run_id = run_id
-        self.hub_threshold = hub_threshold
         #: debug/CI guard: cross-check each superstep's declared
         #: Σ(point_sent_count) against the actual point_messages row count.
         #: The declaration is load-bearing for termination (act==0 &&
@@ -276,11 +278,6 @@ class PregelEngine:
         #: halt early with messages in flight — or never halt.  Costs one
         #: extra action per superstep, so off outside tests.
         self.validate_point_sends = validate_point_sends
-        self._hub_edges: DataFrame | None = None
-        self._hub_ids: DataFrame | None = None
-        #: the running loop's :class:`~graphlite_spark.checkpoint.LoopScope`
-        #: — owns the edge leaf and hub frames, released when run() exits
-        self._scope = None
 
     def _truncate(self, df: DataFrame, superstep: int, aggr: dict[str, float]) -> DataFrame:
         if self.checkpointer is not None:
@@ -296,64 +293,42 @@ class PregelEngine:
         algo: PregelAlgorithm,
         superstep: int,
         aggr: dict[str, float],
-        cache: dict | None = None,
+        ex: dict,
     ) -> DataFrame:
-        """Raw (dst, msg) message rows from the vertices flagged ``send``.
+        """Raw (dst, msg) message rows from the vertices flagged ``send``:
+        an equi-join on the co-partitioned edge table — the edge side is
+        cached with hash(src, P) partitioning, so only the (much smaller)
+        vertex-state side shuffles.
 
-        Base implementation: equi-join on the co-partitioned edge table —
-        the edge side is cached with hash(src, P) partitioning, so only the
-        (much smaller) vertex-state side shuffles.  Subclasses may return
-        *partially combined* rows (the CSR kernel does); correctness only
-        needs the algorithm's combine to be commutative + associative.
-
-        ``cache``: per-expression-token dict (see
-        :meth:`PregelAlgorithm.expr_cache_token`) holding the built join
-        condition and select-list Columns so steady supersteps skip the
-        Python↔JVM expression-building round-trips.
+        ``ex``: the per-expression-token Column cache of the running loop
+        (see :meth:`PregelAlgorithm.expr_cache_token`); its ``"msg"`` entry
+        holds the built join condition and select list so steady
+        supersteps skip the Python↔JVM expression-building round-trips.
         """
-        sending = state.where("send")
-
-        def msg(edges_df: DataFrame, st: DataFrame, tag: str) -> DataFrame:
-            # distinct aliases per branch: the hub/non-hub frames share
-            # lineage with e, which otherwise trips the ambiguous-self-join
-            # analyzer check when the two branches are unioned
-            built = None if cache is None else cache.get(tag)
-            if built is None:
-                built = (
-                    F.col(f"s_{tag}.id") == F.col(f"e_{tag}.src"),
-                    [
-                        F.col(f"e_{tag}.dst").alias("dst"),
-                        algo.message(superstep, aggr)
-                        .cast(algo.value_type)
-                        .alias("msg"),
-                    ],
-                )
-                if cache is not None:
-                    cache[tag] = built
-            cond, sel = built
-            ed, stt = edges_df.alias(f"e_{tag}"), st.alias(f"s_{tag}")
-            return stt.join(ed, cond).select(*sel)
-
-        if self._hub_edges is None:
-            return msg(e, sending, "all")
-        # skew split: hub states are few — broadcast them against the hub
-        # edge blocks so no hub adjacency ever funnels through one reducer
-        hub_sending = F.broadcast(sending.join(self._hub_ids, "id", "left_semi"))
-        normal_sending = sending.join(self._hub_ids, "id", "left_anti")
-        return msg(e, normal_sending, "n").unionByName(
-            msg(self._hub_edges, hub_sending, "h")
-        )
+        if ex["msg"] is None:
+            ex["msg"] = (
+                F.col("s.id") == F.col("e.src"),
+                [
+                    F.col("e.dst").alias("dst"),
+                    algo.message(superstep, aggr)
+                    .cast(algo.value_type)
+                    .alias("msg"),
+                ],
+            )
+        cond, sel = ex["msg"]
+        return state.where("send").alias("s").join(e.alias("e"), cond).select(*sel)
 
     def prepare(self, vertices: DataFrame, edges: DataFrame,
-                algo: PregelAlgorithm) -> tuple[DataFrame, DataFrame]:
+                algo: PregelAlgorithm,
+                scope: LoopScope) -> tuple[DataFrame, DataFrame]:
         """Build (state, edges) — degrees attached, co-hash-partitioned.
 
         Edges are partitioned by ``src`` and checkpointed once (they are
         immutable across supersteps — the reference loads them once into a
         packed CSR, Worker.cc:303-322); vertex state is partitioned by
         ``id`` so the scatter join and the update join both shuffle only
-        the small side.  Runs inside :meth:`run`'s loop scope, which sizes
-        ``num_partitions`` from the edge count when it is None.
+        the small side.  ``scope`` is :meth:`run`'s loop scope, which
+        sizes ``num_partitions`` from the edge count when it is None.
         """
         e = edges.select("src", "dst", F.col("weight").cast("double").alias("weight"))
         # the scope's sorted leaf: the per-superstep plan carries a
@@ -361,22 +336,9 @@ class PregelEngine:
         # Catalyst re-analyzed every superstep, ~30-40 ms at sf0.1), and
         # the preserved sort order keeps the scatter SMJ from re-sorting
         # the immutable edge table every superstep
-        e = self._scope.leaf(e, "src")
-        P = self.num_partitions = self._scope.num_partitions
+        e = scope.leaf(e, "src")
+        P = self.num_partitions = scope.num_partitions
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-        if self.hub_threshold is not None:
-            own = self._scope.own
-            self._hub_ids = own(
-                deg.where(F.col("out_degree") > self.hub_threshold)
-                .select(F.col("src").alias("id"))
-                .persist()
-            )
-            self._hub_edges = own(e.join(
-                self._hub_ids, e["src"] == self._hub_ids["id"], "left_semi"
-            ).persist())
-            e = own(e.join(
-                self._hub_ids, e["src"] == self._hub_ids["id"], "left_anti"
-            ).persist())
         # an optional ``init_value`` vertex column rides into init_value()
         # expressions (warm-start programs); dropped from the state after
         extra = [c for c in ("init_value",) if c in vertices.columns]
@@ -407,16 +369,11 @@ class PregelEngine:
         spark = edges.sparkSession
         # the scope pins AQE and auto-broadcast off (state, edges and inbox
         # are co-hash-partitioned on the join keys, so the shuffle-free
-        # SMJ path beats a per-superstep driver broadcast of the state; the
-        # hub split's explicit F.broadcast hint still broadcasts) and, on
-        # exit, frees the edge leaf and hub frames: the result state is
-        # already lineage-truncated, so nothing the caller holds needs them
+        # SMJ path beats a per-superstep driver broadcast of the state)
+        # and, on exit, frees the edge leaf: the result state is already
+        # lineage-truncated, so nothing the caller holds needs it
         with loop_scope(spark, self.num_partitions) as scope:
-            self._scope = scope
-            try:
-                return self._run_loop(vertices, edges, algo, resume_from, spark)
-            finally:
-                self._scope = None
+            return self._run_loop(vertices, edges, algo, resume_from, scope)
 
     def _run_loop(
         self,
@@ -424,9 +381,9 @@ class PregelEngine:
         edges: DataFrame,
         algo: PregelAlgorithm,
         resume_from: tuple[DataFrame, int, dict[str, float]] | None,
-        spark,
+        scope: LoopScope,
     ) -> PregelResult:
-        state, e = self.prepare(vertices, edges, algo)
+        state, e = self.prepare(vertices, edges, algo, scope)
         aggr = dict(algo.aggr_init)
         start_step = 0
         inbox: DataFrame | None = None
@@ -438,7 +395,9 @@ class PregelEngine:
             # re-derive the messages sent at last_step: they saw the global
             # merged BEFORE last_step (aggr_in), stored in the manifest
             aggr_in = rest[0] if rest else dict(aggr)
-            msgs = self._scatter(ck_state, e, algo, last_step, aggr_in)
+            msgs = self._scatter(
+                ck_state, e, algo, last_step, aggr_in, {"msg": None}
+            )
             pm = algo.point_messages(ck_state, last_step, aggr_in)
             if pm is not None:
                 msgs = msgs.unionByName(
@@ -507,11 +466,10 @@ class PregelEngine:
                 }
                 # targeted sends (sendMessageTo) must count toward `sent`
                 # BEFORE the termination test, or act==0 && sent==0 would
-                # end the run with point messages still in flight.  When
-                # the program declares point_sent_count, Σ of it rides the
-                # same observed-metrics set; the message frame itself stays
-                # lazy (it materializes inside the next superstep's
-                # combine, like the edge scatter).
+                # end the run with point messages still in flight.  Σ of
+                # point_sent_count rides the same observed-metrics set; the
+                # message frame itself stays lazy (it materializes inside
+                # the next superstep's combine, like the edge scatter).
                 pm_cnt_expr = algo.point_sent_count(superstep, aggr_in)
                 ex = {
                     "select": [
@@ -550,7 +508,7 @@ class PregelEngine:
                             for k, (c, merge) in aggr_exprs.items()
                         ],
                     ],
-                    "msg": {},  # per-tag scatter Columns, filled by _scatter
+                    "msg": None,  # scatter Columns, filled by _scatter
                 }
                 expr_token = token if token is not None else _tok_sentinel
             new_state = joined.select(*ex["select"])
@@ -589,31 +547,33 @@ class PregelEngine:
             sent_cnt = int(stats_row["_sent"] or 0)
             aggr = {k: _coerce_aggr(stats_row[k]) for k in ex["aggr_keys"]}
             if pm is not None:
+                if not ex["has_psent"]:
+                    raise ValueError(
+                        f"{algo.name}: point_messages returned rows at "
+                        f"superstep {superstep} but point_sent_count is None "
+                        "— declare the per-vertex send count so the sends "
+                        "ride the superstep's one action"
+                    )
                 pm = pm.select(
                     F.col("dst").cast("long").alias("dst"),
                     F.col("msg").cast(algo.value_type).alias("msg"),
                 )
-                if ex["has_psent"]:
-                    # no checkpoint needed: pm's lineage is one projection
-                    # over the already-truncated new_state, so it stays a
-                    # pure lazy plan consumed inside the next superstep's
-                    # combine — exactly like the edge scatter
-                    declared = int(stats_row["_psent"] or 0)
-                    if self.validate_point_sends:
-                        actual = pm.count()
-                        if actual != declared:
-                            raise ValueError(
-                                f"superstep {superstep}: point_sent_count "
-                                f"declares {declared} sends but "
-                                f"point_messages produced {actual} rows — "
-                                "the two hooks must agree or the act==0 && "
-                                "sent==0 termination test is corrupted"
-                            )
-                    sent_cnt += declared
-                else:
-                    # legacy path: no count expression — one extra action
-                    pm = pm.localCheckpoint(eager=True)
-                    sent_cnt += pm.count()
+                # no checkpoint needed: pm's lineage is one projection over
+                # the already-truncated new_state, so it stays a pure lazy
+                # plan consumed inside the next superstep's combine —
+                # exactly like the edge scatter
+                declared = int(stats_row["_psent"] or 0)
+                if self.validate_point_sends:
+                    actual = pm.count()
+                    if actual != declared:
+                        raise ValueError(
+                            f"superstep {superstep}: point_sent_count "
+                            f"declares {declared} sends but "
+                            f"point_messages produced {actual} rows — "
+                            "the two hooks must agree or the act==0 && "
+                            "sent==0 termination test is corrupted"
+                        )
+                sent_cnt += declared
             metrics.append(
                 SuperstepMetrics(
                     superstep=superstep,
@@ -636,9 +596,7 @@ class PregelEngine:
             # ---- scatter (lazy — runs inside next superstep's jobs) ------
             # messages are part of superstep S's compute: they see aggr_in,
             # not the aggregates S itself produced
-            msgs = self._scatter(
-                new_state, e, algo, superstep, aggr_in, cache=ex["msg"]
-            )
+            msgs = self._scatter(new_state, e, algo, superstep, aggr_in, ex)
             if pm is not None:
                 msgs = msgs.unionByName(pm)
             inbox = algo.combine(msgs)

@@ -1,9 +1,9 @@
 """Deterministic synthetic graph generators for skew stress-testing.
 
 The transcript-derived graphs the engine is verified on are chain-like
-(max degree small), so the hub-handling code paths — degree orientation
-in the wedge family, ``hub_threshold`` broadcast-scatter in the Pregel
-engine — are parity-TESTED but not skew-MEASURED by the standard bench.
+(max degree small), so the hub-handling code path — degree orientation
+in the wedge family — is parity-TESTED but not skew-MEASURED by the
+standard bench.
 This module generates a power-law graph entirely inside Spark (no driver
 data, no RNG state): every edge is a pure function of its index under
 ``xxhash64``, so the graph is reproducible across runs, partitionings

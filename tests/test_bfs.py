@@ -1,4 +1,4 @@
-"""BFS parity vs a python oracle, on both engines."""
+"""BFS parity vs a python oracle."""
 
 from __future__ import annotations
 
@@ -7,8 +7,7 @@ from collections import deque
 import pytest
 from pyspark.sql import functions as F
 
-from graphlite_spark.algos.bfs import INF, BFS, bfs
-from graphlite_spark.operators.csr import CSRPregelEngine
+from graphlite_spark.algos.bfs import INF, bfs
 from graphlite_spark.sources.transcripts import TINYGRAPH_EDGES
 from tests.reference_sim import random_digraph
 
@@ -56,17 +55,6 @@ def test_bfs_fixed_hops(spark):
     res = bfs(v, e, source=0, fixed_supersteps=4)  # hops <= 3
     got = [r["value"] for r in res.state.orderBy("id").collect()]
     assert got == py_bfs(edges, n, 0, max_hops=3)
-
-
-def test_bfs_csr_engine(spark):
-    edges, n = GRAPHS["rand"]
-    e = spark.createDataFrame(
-        [(s, d, 1.0) for s, d in edges], "src long, dst long, weight double"
-    )
-    v = spark.range(n).select(F.col("id"))
-    res = CSRPregelEngine(num_partitions=3).run(v, e, BFS(source=0))
-    got = [r["value"] for r in res.state.orderBy("id").collect()]
-    assert got == py_bfs(edges, n, 0)
 
 
 def test_harmonic_msbfs_bruteforce(spark):

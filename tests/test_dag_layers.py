@@ -1,11 +1,10 @@
-"""DAG longest-path layering: hand answers, convergence, CSR max parity."""
+"""DAG longest-path layering: hand answers and convergence."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from graphlite_spark.algos.dag import DagLayers, dag_layers
-from graphlite_spark.operators.csr import CSRPregelEngine
+from graphlite_spark.algos.dag import dag_layers
 
 
 def _graph(spark, edges, n):
@@ -40,12 +39,3 @@ def test_dag_layers_depth_bounds(spark):
     assert got == {i: i for i in range(6)}
     assert res.converged
 
-
-def test_dag_layers_csr_max_parity(spark):
-    # same program on the CSR kernel engine exercises reduce_kind="max"
-    v, e = _graph(spark, EDGES, 6)
-    res = CSRPregelEngine(num_partitions=2).run(
-        v, e, DagLayers(fixed_supersteps=9)
-    )
-    got = {r["id"]: r["value"] for r in res.state.collect()}
-    assert got == WANT

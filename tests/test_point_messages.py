@@ -67,3 +67,26 @@ def test_point_sent_count_mismatch_raises(spark):
         PregelEngine(num_partitions=2, validate_point_sends=True).run(
             v, e, _LyingRotate(n, rounds=2)
         )
+
+
+class _UncountedRotate(RingRotate):
+    """Point sends without the per-vertex count declaration."""
+
+    def point_sent_count(self, superstep, aggr):
+        return None
+
+
+def test_point_messages_without_count_raises(spark):
+    """A program whose point_messages returns rows must declare
+    point_sent_count: the engine raises, and the failed run leaves no
+    persisted RDD behind."""
+    import pytest
+
+    n = 12
+    v = spark.range(n).select(F.col("id"))
+    e = spark.createDataFrame([], "src long, dst long, weight double")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(ValueError, match="point_sent_count"):
+        PregelEngine(num_partitions=2).run(v, e, _UncountedRotate(n, rounds=3))
+    assert set(jsc.getPersistentRDDs().keySet()) == before
