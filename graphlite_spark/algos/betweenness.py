@@ -74,12 +74,12 @@ def betweenness_sampled(
             .persist()
         )
         # ---- forward: levels[t] = (s, v, sigma) first reached at hop t
-        lvl0 = truncate_plan(
+        lvl0 = scope.own(truncate_plan(
             src_df.select(
                 "s", F.col("s").alias("v"), F.lit(1).cast("long").alias("sigma")
             ),
             eager=True,
-        )
+        ))
         levels = [lvl0]
         reached = lvl0.select("s", "v")
         frontier = lvl0
@@ -89,13 +89,13 @@ def betweenness_sampled(
                 .groupBy("s", F.col("dst").alias("v"))
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            nxt = truncate_plan(
+            nxt = scope.own(truncate_plan(
                 cand.join(reached, ["s", "v"], "left_anti"), eager=True
-            )
+            ))
             levels.append(nxt)
-            reached = truncate_plan(
+            reached = scope.own(truncate_plan(
                 reached.unionByName(nxt.select("s", "v")), eager=True
-            )
+            ))
             frontier = nxt
         # ---- backward: delta per level, deepest first (delta there = 0)
         deltas = []  # (s, v, delta) for t = max_depth-1 .. 1
@@ -126,7 +126,7 @@ def betweenness_sampled(
                 .groupBy("s", "v")
                 .agg(F.sum("term").alias("dl"))
             )
-            dt = truncate_plan(
+            dt = scope.own(truncate_plan(
                 ft.join(contrib, ["s", "v"], "left").select(
                     "s",
                     "v",
@@ -134,7 +134,7 @@ def betweenness_sampled(
                     F.coalesce("dl", F.lit(0)).cast("long").alias("delta"),
                 ),
                 eager=True,
-            )
+            ))
             deltas.append(dt)
             below = dt
         # ---- accumulate: B(v) = sum_s delta(s, v); v != s by level >= 1

@@ -105,14 +105,14 @@ def shortest_path_counts(
     # edge set; shuffling the edges instead measured 1.2x the wall at sf0.01
     with loop_scope(edges.sparkSession, broadcast=True) as scope:
         e = scope.own(edges.select("src", "dst").persist())
-        state = vertices.select(
+        state = scope.own(vertices.select(
             "id",
             F.when(F.col("id") == source, F.lit(0)).cast("long").alias("dist"),
             F.when(F.col("id") == source, F.lit(1))
             .otherwise(F.lit(0))
             .cast("long")
             .alias("sigma"),
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False))
         for d in range(1, depth + 1):
             frontier = state.where(F.col("dist") == d - 1).select(
                 F.col("id").alias("src"), "sigma"
@@ -123,7 +123,7 @@ def shortest_path_counts(
                 .agg(F.sum("sigma").alias("s"))
                 .select(F.col("dst").alias("mid"), "s")
             )
-            state = (
+            state = scope.own(
                 state.join(msg, state["id"] == msg["mid"], "left")
                 .select(
                     "id",
@@ -140,6 +140,7 @@ def shortest_path_counts(
                 .localCheckpoint(eager=False)
             )
         state.count()
+        scope.keep(state)
     return state.select(
         "id",
         F.coalesce("dist", F.lit(INF)).cast("long").alias("dist"),
@@ -173,9 +174,12 @@ def stress_from_source(
     fwd = shortest_path_counts(vertices, edges, source, depth)
     # broadcast=True: the shortest_path_counts frontier rule, reversed
     with loop_scope(edges.sparkSession, broadcast=True) as scope:
+        scope.own(fwd)  # the frame the forward loop kept
         e = scope.own(edges.select("src", "dst").persist())
-        state = fwd.withColumn("g", F.lit(0).cast("long")).localCheckpoint(
-            eager=False
+        state = scope.own(
+            fwd.withColumn("g", F.lit(0).cast("long")).localCheckpoint(
+                eager=False
+            )
         )
         for d in range(depth - 1, -1, -1):
             nxt = state.where(F.col("dist") == d + 1).select(
@@ -187,7 +191,7 @@ def stress_from_source(
                 .agg(F.sum(F.lit(1) + F.col("gw")).alias("gs"))
                 .select(F.col("src").alias("cid"), "gs")
             )
-            state = (
+            state = scope.own(
                 state.join(contrib, state["id"] == contrib["cid"], "left")
                 .select(
                     "id",
@@ -204,6 +208,7 @@ def stress_from_source(
                 .localCheckpoint(eager=False)
             )
         state.count()
+        scope.keep(state)
     return state.select(
         "id",
         "dist",

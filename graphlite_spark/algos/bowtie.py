@@ -47,23 +47,24 @@ from graphlite_spark.algos.scc import (
     _min_reach_fixpoint,
     strongly_connected_components,
 )
-from graphlite_spark.checkpoint import loop_scope, truncate_plan
+from graphlite_spark.checkpoint import LoopScope, loop_scope, truncate_plan
 
 
 def _reached_from(
+    scope: LoopScope,
     verts: DataFrame,
     edges: DataFrame,
     seeds: DataFrame,
     span: int,
     min_id: int,
-    num_partitions: int,
     max_rounds: int,
     reverse: bool = False,
 ) -> DataFrame:
     """(id, flag) — flag = some seed reaches id along ``edges``
     (``reverse=True``: id reaches some seed).  Seed-first arithmetic
     remap (ids live in [min_id, min_id+span)) + the SCC min-reach
-    fixpoint; empty seed set short-circuits."""
+    fixpoint, staged in ``scope`` at its width; empty seed set
+    short-circuits."""
     if seeds.limit(1).count() == 0:
         return verts.select("id", F.lit(False).alias("flag"))
     m = (
@@ -79,15 +80,15 @@ def _reached_from(
     src_m = m.select(F.col("id").alias("src"), F.col("nid").alias("nsrc"))
     dst_m = m.select(F.col("id").alias("dst"), F.col("nid").alias("ndst"))
     a, b = ("ndst", "nsrc") if reverse else ("nsrc", "ndst")
-    e = (
+    e = scope.own(
         edges.join(src_m, "src").join(dst_m, "dst")
         .select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .repartition(num_partitions, "src")
+        .repartition(scope.num_partitions, "src")
         .sortWithinPartitions("src")
         .localCheckpoint(eager=True)
     )
     labs, converged = _min_reach_fixpoint(
-        m.select(F.col("nid").alias("id")), e, max_rounds
+        scope, m.select(F.col("nid").alias("id")), e, max_rounds
     )
     if not converged:
         import warnings
@@ -101,10 +102,8 @@ def _reached_from(
         m.join(labs.select(F.col("id").alias("nid"), "lab"), "nid")
         .select("id", (F.col("lab") < span).alias("flag"))
     )
-    out = truncate_plan(out, eager=True)  # materialize before release
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
-    release_local_checkpoint(e)
+    out = scope.own(truncate_plan(out, eager=True))
+    scope.release(e, labs)
     return out
 
 
@@ -125,7 +124,7 @@ def bowtie_decomposition(
     # direct _min_reach_fixpoint calls run under its pinned width
     with loop_scope(edges.sparkSession, num_partitions) as scope:
         # reused by 7 fixpoints below; sizes the width
-        e = scope.stage(
+        e, _ = scope.stage(
             edges.select("src", "dst")
             .where(F.col("src") != F.col("dst"))
             .distinct(),
@@ -135,20 +134,20 @@ def bowtie_decomposition(
         # the vertex set is read ~7x (bounds, SCC, 4 reachability remaps,
         # weak CC) — stage it once instead of re-running the caller's
         # derivation (often a distinct over a raw scan) per reference
-        vertices = truncate_plan(vertices.select("id"), eager=True)
+        vertices = scope.own(truncate_plan(vertices.select("id"), eager=True))
         bounds = vertices.agg(
             F.min("id").alias("mn"), F.max("id").alias("mx"),
             F.count(F.lit(1)).alias("nv"),
         ).first()
         if not bounds["nv"]:
-            return vertices.select("id", F.lit("DISCONNECTED").alias("cls"))
+            return scope.keep(vertices).select(
+                "id", F.lit("DISCONNECTED").alias("cls")
+            )
         min_id, span = bounds["mn"], bounds["mx"] - bounds["mn"] + 1
-        scc = truncate_plan(
-            strongly_connected_components(
-                vertices, e, num_partitions=P, max_rounds=max_rounds
-            ),
-            eager=True,
-        )
+        # the nested loops keep their results; this scope frees them
+        scc = scope.own(strongly_connected_components(
+            vertices, e, num_partitions=P, max_rounds=max_rounds
+        ))
         top = (
             scc.groupBy("scc").agg(F.count(F.lit(1)).alias("n"))
             .orderBy(F.desc("n"), F.asc("scc"))
@@ -166,17 +165,18 @@ def bowtie_decomposition(
 
         with ThreadPoolExecutor(2) as pool:
             fut_p = pool.submit(  # core ⇝ v
-                _reached_from, vertices, e, core, span, min_id, P, max_rounds
+                _reached_from, scope, vertices, e, core, span, min_id,
+                max_rounds,
             )
             fut_m = pool.submit(
-                _reached_from, vertices, e, core, span, min_id, P,
+                _reached_from, scope, vertices, e, core, span, min_id,
                 max_rounds, True,
             )
             rp = fut_p.result()
             rm = fut_m.result()
-        wcc = connected_components_fast(
+        wcc = scope.own(connected_components_fast(
             vertices, e, num_partitions=P, max_rounds=max_rounds
-        )
+        ))
         core_wcc = (
             wcc.where(F.col("id") == core_lab).collect()[0]["component"]
         )
@@ -185,7 +185,7 @@ def bowtie_decomposition(
             .join(rm.withColumnRenamed("flag", "rm"), "id")
             .join(wcc, "id")
         )
-        flags = truncate_plan(flags, eager=True)
+        flags = scope.own(truncate_plan(flags, eager=True))
         in_ids = flags.where(
             F.col("rm") & (F.col("scc") != core_lab)
         ).select("id")
@@ -194,11 +194,11 @@ def bowtie_decomposition(
         ).select("id")
         with ThreadPoolExecutor(2) as pool:
             fut_f = pool.submit(
-                _reached_from, vertices, e, in_ids, span, min_id, P,
+                _reached_from, scope, vertices, e, in_ids, span, min_id,
                 max_rounds,
             )
             fut_b = pool.submit(
-                _reached_from, vertices, e, out_ids, span, min_id, P,
+                _reached_from, scope, vertices, e, out_ids, span, min_id,
                 max_rounds, True,
             )
             fin = fut_f.result()

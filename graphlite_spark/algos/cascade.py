@@ -54,7 +54,7 @@ def lt_cascade(
         deg = und.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("deg")
         )
-        state = (
+        state = scope.own(
             vertices.select("id")
             .join(deg, "id", "left")
             .select(
@@ -88,7 +88,7 @@ def lt_cascade(
                 .groupBy(F.col("dst").alias("mid"))
                 .agg(F.count(F.lit(1)).alias("c"))
             )
-            state = (
+            state = scope.own(
                 state.join(inc, state["id"] == inc["mid"], "left")
                 .select(
                     "id",
@@ -113,6 +113,7 @@ def lt_cascade(
                 .localCheckpoint(eager=False)
             )
         state.count()
+        scope.keep(state)
     return state.select(
         "id",
         F.col("theta").alias("theta_micros"),
@@ -160,7 +161,7 @@ def ic_cascade(
             .distinct()
             .persist()
         )
-        state = (
+        state = scope.own(
             vertices.select(
                 "id",
                 F.when(
@@ -183,7 +184,7 @@ def ic_cascade(
                 .select(F.col("dst").alias("mid"))
                 .distinct()
             )
-            state = (
+            state = scope.own(
                 state.join(reached, state["id"] == reached["mid"], "left")
                 .select(
                     "id",
@@ -195,6 +196,7 @@ def ic_cascade(
                 .localCheckpoint(eager=False)
             )
         state.count()
+        scope.keep(state)
     return state.select(
         "id", F.coalesce("rnd", F.lit(-1)).cast("long").alias("active_round")
     )

@@ -305,14 +305,13 @@ def katz_centrality(
     needs α < 1/λ_max; 1/8 is comfortably inside it for the sparse
     transcript graph (spectral radius ≈ max chain branching).  Per
     round: one equi-join + one map-side-combined groupBy — rank-sized
-    shuffles; loop discipline matches the engine (AQE off, lazy
-    localCheckpoint per round)."""
+    shuffles; AQE off, lazy localCheckpoint per round."""
     MICRO = 1_000_000
     with loop_scope(edges.sparkSession) as scope:
         e = scope.leaf(edges.select("src", "dst"), "src")
-        state = vertices.select(
+        state = scope.own(vertices.select(
             "id", F.lit(MICRO).cast("long").alias("katz")
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False))
         for _ in range(iterations):
             msg = (
                 e.join(
@@ -325,7 +324,7 @@ def katz_centrality(
                 .groupBy("id")
                 .agg(F.sum("m").alias("s"))
             )
-            state = (
+            state = scope.own(
                 state.select("id")
                 .join(msg, "id", "left")
                 .select(
@@ -337,6 +336,7 @@ def katz_centrality(
                 .localCheckpoint(eager=False)
             )
         state.count()
+        scope.keep(state)
     return state
 
 
@@ -363,14 +363,14 @@ def eigenvector_centrality(
     behavior; run on the loop-closed graph for conversation chains).
 
     Per round: one equi-join + one map-side-combined groupBy + a 1-ROW
-    max broadcast back — rank-sized shuffles, loop discipline matches
-    the engine (AQE off, lazy localCheckpoint per round)."""
+    max broadcast back — rank-sized shuffles, AQE off, lazy
+    localCheckpoint per round."""
     MICRO = 1_000_000
     with loop_scope(edges.sparkSession) as scope:
         e = scope.leaf(edges.select("src", "dst"), "src")
-        state = vertices.select(
+        state = scope.own(vertices.select(
             "id", F.lit(MICRO).cast("long").alias("eig")
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False))
         for _ in range(iterations):
             msg = (
                 e.join(state.select(F.col("id").alias("src"), "eig"), "src")
@@ -384,7 +384,7 @@ def eigenvector_centrality(
                 .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("s"))
             )
             mx = s_all.agg(F.max("s").alias("mx"))
-            state = (
+            state = scope.own(
                 s_all.join(F.broadcast(mx))
                 .select(
                     "id",
@@ -471,7 +471,8 @@ def spectral_gap_lambda2(
         )
 
     with loop_scope(spark) as scope:
-        und = scope.leaf(
+        # staged first: its row count is the undirected edge count
+        staged, row = scope.stage(
             edges.select("src", "dst")
             .where(F.col("src") != F.col("dst"))
             .unionByName(
@@ -479,10 +480,11 @@ def spectral_gap_lambda2(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 ).where(F.col("src") != F.col("dst"))
             )
-            .distinct(),
-            "src",
+            .distinct()
         )
-        ne = scope.rows // 2
+        und = scope.leaf(staged, "src")
+        scope.release(staged)
+        ne = row["n"] // 2
         deg = und.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).cast("long").alias("d")
         )
@@ -494,7 +496,7 @@ def spectral_gap_lambda2(
                 F.sum((F.col("d").cast(dec) * F.col("d").cast(dec))).alias("s")
             ).first()["s"]
         )
-        state = deg.select(
+        state = scope.own(deg.select(
             "id",
             "d",
             (
@@ -502,9 +504,9 @@ def spectral_gap_lambda2(
                 % F.lit(2 * MICRO + 1)
                 - F.lit(MICRO)
             ).cast("long").alias("x"),
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False))
         for _ in range(int(iterations)):
-            g = gather(state).localCheckpoint(eager=False)
+            g = scope.own(gather(state).localCheckpoint(eager=False))
             syd = int(
                 g.agg(
                     F.sum(
@@ -526,15 +528,15 @@ def spectral_gap_lambda2(
                 defl.agg(F.max(F.abs(F.col("f"))).alias("m")).first()["m"]
             )
             if mx == 0:
-                state = defl.select(
+                state = scope.own(defl.select(
                     "id", "d", F.col("f").alias("x")
-                ).localCheckpoint(eager=False)
+                ).localCheckpoint(eager=False))
                 break
-            state = defl.select(
+            state = scope.own(defl.select(
                 "id",
                 "d",
                 F.expr(f"({MICRO} * f) div {mx}").cast("long").alias("x"),
-            ).localCheckpoint(eager=False)
+            ).localCheckpoint(eager=False))
         z = gather(state.select("id", "d", "x"))
         fin = (
             state.select("id", "d", "x")
@@ -662,7 +664,7 @@ def algebraic_distance(
         deg = und.groupBy("src").agg(
             F.count(F.lit(1)).cast("long").alias("deg")
         )
-        x = (
+        x = scope.own(
             vertices.select(
                 "id",
                 (
@@ -689,7 +691,7 @@ def algebraic_distance(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("xs").cast("long").alias("s"))
             )
-            x = (
+            x = scope.own(
                 x.join(gather, "id", "left")
                 .select(
                     "id",

@@ -104,10 +104,9 @@ def connected_components_fast(
     monotone, so the change count is computed from columns already in the
     round's plan — no extra comparison join.
     """
-    from pyspark.sql import Observation
-
     und = edges if already_undirected else symmetrize(edges)
     a = vertices.select(F.col("id"), F.col("id").alias("comp"))
+    nxt = None
     # the relax join keys on e.src, so the sorted src leaf is reused
     # exchange- and sort-free every round
     with loop_scope(edges.sparkSession, num_partitions) as scope:
@@ -132,22 +131,20 @@ def connected_components_fast(
             lab = b.select(
                 F.col("id").alias("lid"), F.col("relaxed").alias("lcomp")
             )
-            # the change count rides the round's materialization as an
-            # observed metric — no separate .agg().first() action/stages
-            obs = Observation()
-            nxt = truncate_plan(
+            # the change count (in place of the row count: the leaf pinned
+            # the width) rides the round's materialization as an observed
+            # metric — no separate .agg().first() action/stages
+            nxt, row = scope.stage(
                 b.join(lab, b["relaxed"] == lab["lid"])
-                .select("id", "old", F.col("lcomp").alias("comp"))
-                .observe(
-                    obs,
-                    F.sum((F.col("comp") != F.col("old")).cast("long")).alias("n"),
-                ),
-                eager=True,
+                .select("id", "old", F.col("lcomp").alias("comp")),
+                truncate=True,
+                prev=nxt,
+                n=F.sum((F.col("comp") != F.col("old")).cast("long")),
             )
-            changed = obs.get["n"]
             a = nxt.select("id", "comp")
-            if not changed:
+            if not row["n"]:
                 break
+        scope.keep(nxt)
     return a.select("id", F.col("comp").alias("component"))
 
 
@@ -224,6 +221,38 @@ def incremental_components(
     ).select("id", F.coalesce("mcomp", "component").alias("component"))
 
 
+def _peel(scope, e0, alive, n, k, max_rounds, removed=None):
+    """(survivors, count) — peel ``alive`` (``n`` rows) toward its
+    ``k``-core over the staged undirected edge set ``e0``: each round
+    keeps the vertices with at least ``k`` neighbors inside the
+    survivors, until a round removes none or ``max_rounds`` binds.  One
+    job per round: the survivor count rides the round's checkpoint, and
+    each round frees the round before it — never the caller's ``alive``.
+    ``removed`` collects each round's removal count."""
+    prev = None
+    for _ in range(max_rounds):
+        ea = e0.join(
+            alive.select(F.col("id").alias("src")), "src", "left_semi"
+        ).join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
+        deg = ea.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
+        alive, row = scope.stage(
+            alive.join(
+                deg.where(F.col("c") >= k).select(F.col("src").alias("id")),
+                "id",
+                "left_semi",
+            ),
+            prev=prev,
+        )
+        prev = alive
+        m = int(row["n"])
+        if removed is not None:
+            removed.append(n - m)
+        if m == n:
+            break
+        n = m
+    return alive, n
+
+
 def k_core(
     vertices: DataFrame,
     edges: DataFrame,
@@ -241,36 +270,14 @@ def k_core(
     filtering) + one map-side-combined degree count; survivors only ever
     shrink, so round cost is monotonically decreasing.
     """
-    from pyspark.sql import Observation
-
     und = edges if already_undirected else symmetrize(edges)
     alive = vertices.select("id")
     # staged closure: rounds stop re-analyzing the symmetrize/distinct
     # lineage, and the degree shuffle width follows the data
     with loop_scope(edges.sparkSession) as scope:
-        e0 = scope.stage(und.select("src", "dst"))
-        prev_n = alive.count()
-        for _ in range(max_rounds):
-            ea = e0.join(
-                alive.select(F.col("id").alias("src")), "src", "left_semi"
-            ).join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
-            deg = ea.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-            # the survivor count rides the round's materialization as an
-            # observed metric — no separate count() action/stages
-            obs = Observation()
-            alive = (
-                alive.join(
-                    deg.where(F.col("c") >= k).select(F.col("src").alias("id")),
-                    "id",
-                    "left_semi",
-                )
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            n = int(obs.get["n"] or 0)
-            if n == prev_n:
-                break
-            prev_n = n
+        e0, _ = scope.stage(und.select("src", "dst"))
+        alive, _ = _peel(scope, e0, alive, alive.count(), k, max_rounds)
+        scope.keep(alive)
     core = alive.select(F.col("id").alias("cid"))
     return vertices.select("id").join(
         core, vertices["id"] == core["cid"], "left"
@@ -299,41 +306,22 @@ def coreness(
     per-round shape is k_core's two semi-joins + one map-side-combined
     degree count on the surviving subgraph.
     """
-    from pyspark.sql import Observation
-
     und = edges if already_undirected else symmetrize(edges)
     out = vertices.select("id", F.lit(0).cast("long").alias("coreness"))
     alive = vertices.select("id")
-    # staged closure + observed survivor counts — the k_core loop
     with loop_scope(edges.sparkSession) as scope:
-        e0 = scope.stage(und.select("src", "dst"))
+        e0, _ = scope.stage(und.select("src", "dst"))
+        n = alive.count()
         for k in range(1, max_k + 1):
-            prev_n = alive.count()
-            if prev_n == 0:
+            if n == 0:
                 break
-            for _ in range(max_rounds):
-                ea = e0.join(
-                    alive.select(F.col("id").alias("src")), "src", "left_semi"
-                ).join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
-                deg = ea.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-                obs = Observation()
-                alive = (
-                    alive.join(
-                        deg.where(F.col("c") >= k).select(F.col("src").alias("id")),
-                        "id",
-                        "left_semi",
-                    )
-                    .observe(obs, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True)
-                )
-                n = int(obs.get["n"] or 0)
-                if n == prev_n:
-                    break
-                prev_n = n
-            if prev_n == 0:
+            # level k peels the (k-1)-core, which stays live: the
+            # previous level's ``out`` still reads it
+            alive, n = _peel(scope, e0, alive, n, k, max_rounds)
+            if n == 0:
                 break
             survivors = alive.select(F.col("id").alias("kid"))
-            out = (
+            out = scope.own(
                 out.join(survivors, out["id"] == survivors["kid"], "left")
                 .select(
                     "id",
@@ -344,6 +332,10 @@ def coreness(
                 )
                 .localCheckpoint(eager=False)
             )
+        # materialized here: the level chain reads survivor frames the
+        # scope frees on exit
+        out.count()
+        scope.keep(out)
     return out
 
 
@@ -586,42 +578,15 @@ def peel_layer_histogram(
     per round on shrinking survivors); per round ONE count action —
     the histogram is round-count-sized driver state (the kmeans
     codebook precedent), never a per-vertex collect."""
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
-    alive = vertices.select("id")
-    rows: list[tuple[int, int]] = []
-    # staged closure + observed survivor counts — the k_core loop
+    removed: list[int] = []
     with loop_scope(spark) as scope:
-        e0 = scope.stage(symmetrize(edges).select("src", "dst"))
-        prev_n = alive.count()
-        for r in range(1, max_rounds + 1):
-            ea = e0.join(
-                alive.select(F.col("id").alias("src")), "src", "left_semi"
-            ).join(
-                alive.select(F.col("id").alias("dst")), "dst", "left_semi"
-            )
-            deg = ea.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-            obs = Observation()
-            alive = (
-                alive.join(
-                    deg.where(F.col("c") >= k).select(
-                        F.col("src").alias("id")
-                    ),
-                    "id",
-                    "left_semi",
-                )
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            n = int(obs.get["n"] or 0)
-            if prev_n - n > 0:
-                rows.append((r, prev_n - n))
-            if n == prev_n:
-                break
-            prev_n = n
-    if prev_n > 0:
-        rows.append((0, prev_n))
+        e0, _ = scope.stage(symmetrize(edges).select("src", "dst"))
+        alive = vertices.select("id")
+        _, n = _peel(scope, e0, alive, alive.count(), k, max_rounds, removed)
+    rows = [(r, d) for r, d in enumerate(removed, 1) if d > 0]
+    if n > 0:
+        rows.append((0, n))
     return spark.createDataFrame(
         rows, "layer int, n_vertices long"
     )

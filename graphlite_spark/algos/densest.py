@@ -54,9 +54,9 @@ def densest_subgraph_peel(
             .distinct(),
             "lo",
         )
-        alive = vertices.select("id").localCheckpoint(eager=False)
+        alive = scope.own(vertices.select("id").localCheckpoint(eager=False))
         for r in range(rounds + 1):
-            e_t = (
+            e_t = scope.own(
                 pairs.join(alive.select(F.col("id").alias("lo")), "lo", "left_semi")
                 .join(alive.select(F.col("id").alias("hi")), "hi", "left_semi")
                 .localCheckpoint(eager=False)
@@ -86,7 +86,7 @@ def densest_subgraph_peel(
                 .groupBy("id")
                 .agg(F.count(F.lit(1)).cast("long").alias("deg"))
             )
-            alive = (
+            alive = scope.own(
                 alive.join(deg, "id", "left")
                 .crossJoin(F.broadcast(stats))
                 .where(

@@ -32,7 +32,7 @@ def hits(vertices: DataFrame, edges: DataFrame, iterations: int = 3) -> DataFram
     with loop_scope(edges.sparkSession) as scope:
         # dual gather layouts, as in salsa below: each half-step's SMJ
         # rides its pre-sorted leaf exchange- and sort-free on the edge side
-        e0 = scope.stage(edges.select("src", "dst"))
+        e0, _ = scope.stage(edges.select("src", "dst"))
         e_src, e_dst = scope.leaf(e0, "src"), scope.leaf(e0, "dst")
         scope.release(e0)
         for _ in range(iterations):
@@ -83,7 +83,7 @@ def salsa(vertices: DataFrame, edges: DataFrame, iterations: int = 3) -> DataFra
         # dual gather layouts (CSC/CSR): the auth phase gathers along dst,
         # the hub phase along src — each phase's SMJ rides its leaf
         # sorted, exchange- and sort-free on the edge side
-        e0 = scope.stage(edges.select("src", "dst"))
+        e0, _ = scope.stage(edges.select("src", "dst"))
         e_dst, e_src = scope.leaf(e0, "dst"), scope.leaf(e0, "src")
         scope.release(e0)
         # degree tables are loop-static: stage once instead of re-running

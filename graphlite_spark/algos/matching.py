@@ -21,8 +21,8 @@ Scale shape per round: one explode of the live edge set into its two
 endpoint incidences + one map-side-combined groupBy (min of a
 (h, u, v) struct — commutative, a hub's reducer sees at most P partial
 rows), two equi-joins back to the live edges, two anti-joins to drop
-matched endpoints.  Loop discipline matches mis.py: AQE off, lazy
-``localCheckpoint`` per round, one count action per round.
+matched endpoints.  Loop discipline: AQE off, lazy ``localCheckpoint``
+per round, one count action per round.
 """
 
 from __future__ import annotations
@@ -62,14 +62,15 @@ def maximal_matching(
     with loop_scope(edges.sparkSession, broadcast=True) as scope:
         # the staged count sizes the width; coalesced to it, the live set
         # keeps few partitions through the broadcast joins below
-        live = scope.stage(
+        live, row = scope.stage(
             symmetrize(edges)
             .where(F.col("src") < F.col("dst"))
             .select(F.col("src").alias("u"), F.col("dst").alias("v"))
             .withColumn("h", _edge_priority())
-        ).coalesce(scope.num_partitions)
+        )
+        live = live.coalesce(scope.num_partitions)
         matched = None  # accumulated (id, mate) rows
-        remaining = scope.rows
+        remaining = row["n"]
         for _ in range(max_rounds):
             if remaining == 0:
                 break
@@ -102,12 +103,12 @@ def maximal_matching(
             # live edges only ever reference so-far-unmatched vertices, so
             # dropping THIS round's matched endpoints keeps the invariant
             mids = pairs.select("id")
-            live = (
+            live = scope.own(
                 live.join(mids.select(F.col("id").alias("u")), "u", "left_anti")
                 .join(mids.select(F.col("id").alias("v")), "v", "left_anti")
                 .localCheckpoint(eager=False)
             )
-            matched = matched.localCheckpoint(eager=False)
+            matched = scope.own(matched.localCheckpoint(eager=False))
             remaining = live.count()
         if matched is not None:
             # materialize before the scope frees the staged live set

@@ -22,8 +22,9 @@ identical rounds and the outputs are hash-exact.
 Scale shape per round (both): one equi-join of the undirected edge set
 against vertex state + one map-side-combined groupBy (bool_or / bit_or —
 commutative, so a hub's reducer sees at most P partial rows), then a
-vertex-sized left join.  Loop discipline matches k_core: AQE off, lazy
-``localCheckpoint`` per round, one count action per round.  Both sides
+vertex-sized left join.  Loop discipline matches k_core: AQE off, one
+eager checkpoint per round with the remaining count observed on it —
+one job per round.  Both sides
 run the identical ``max_rounds`` cap, so equality holds even if the cap
 binds (undecided/uncolored vertices report -1 on BOTH engines).
 """
@@ -33,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import loop_scope, truncate_plan
+from graphlite_spark.checkpoint import loop_scope
 
 from graphlite_spark.algos.components import symmetrize
 from graphlite_spark.functions.hashes import hash48
@@ -74,12 +75,13 @@ def maximal_independent_set(
     self-loop-free closure of ``edges``."""
     with loop_scope(edges.sparkSession) as scope:
         und = scope.leaf(symmetrize(edges).select("src", "dst"), "src")
-        state = truncate_plan(vertices.select(
+        # the undecided count rides each round's checkpoint job
+        undecided = F.sum((F.col("st") == -1).cast("long"))
+        state, row = scope.stage(vertices.select(
             "id", _priority().alias("h"), F.lit(-1).cast("int").alias("st")
-        ))
-        remaining = state.where(F.col("st") == -1).count()
+        ), truncate=True, remaining=undecided)
         for _ in range(max_rounds):
-            if remaining == 0:
+            if not row["remaining"]:
                 break
             undec = state.where(F.col("st") == -1).select("id", "h")
             # per undecided vertex: does any undecided neighbor outrank it
@@ -117,11 +119,11 @@ def maximal_independent_set(
             )
             s = sel.select(F.col("id").alias("sid"))
             d = dominated.select(F.col("id").alias("did"))
-            # truncate_plan, not bare localCheckpoint: the round joins
+            # truncate=True, not bare localCheckpoint: the round joins
             # `state` against two frames derived from it, which multiplies
             # the inherited sizeInBytes stats each round (see
             # checkpoint.truncate_plan)
-            state = truncate_plan(
+            state, row = scope.stage(
                 state.join(s, state["id"] == s["sid"], "left")
                 .join(d, state["id"] == d["did"], "left")
                 .select(
@@ -133,11 +135,12 @@ def maximal_independent_set(
                     .otherwise(F.lit(-1))
                     .cast("int")
                     .alias("st"),
-                )
+                ),
+                truncate=True,
+                prev=state,
+                remaining=undecided,
             )
-            remaining = state.where(F.col("st") == -1).count()
-    # every round's state leaf was materialized by its count(), so the
-    # scope freed the edge leaf without orphaning the result
+        scope.keep(state)
     return state.select("id", F.col("st").cast("long").alias("status"))
 
 
@@ -152,12 +155,12 @@ def greedy_coloring(
     pick = F.expr(lowest_missing_color_sql("coalesce(mask, 0)"))
     with loop_scope(edges.sparkSession) as scope:
         und = scope.leaf(symmetrize(edges).select("src", "dst"), "src")
-        state = truncate_plan(vertices.select(
+        uncolored = F.sum((F.col("color") == -1).cast("long"))
+        state, row = scope.stage(vertices.select(
             "id", _priority().alias("h"), F.lit(-1).cast("int").alias("color")
-        ))
-        remaining = state.where(F.col("color") == -1).count()
+        ), truncate=True, remaining=uncolored)
         for _ in range(max_rounds):
-            if remaining == 0:
+            if not row["remaining"]:
                 break
             # one pass over the edge set: per vertex, (a) does any
             # UNCOLORED neighbor outrank it, (b) the bitmask of COLORED
@@ -194,9 +197,9 @@ def greedy_coloring(
             a = agg.select(
                 F.col("dst").alias("aid"), "has_higher", "mask"
             )
-            # truncate_plan for the same stats-squaring reason as the MIS
+            # truncate=True for the same stats-squaring reason as the MIS
             # loop above (state appears on both sides of the nbr join)
-            state = truncate_plan(
+            state, row = scope.stage(
                 state.join(a, state["id"] == a["aid"], "left")
                 .select(
                     "id",
@@ -208,7 +211,10 @@ def greedy_coloring(
                     .otherwise(F.lit(-1))
                     .cast("int")
                     .alias("color"),
-                )
+                ),
+                truncate=True,
+                prev=state,
+                remaining=uncolored,
             )
-            remaining = state.where(F.col("color") == -1).count()
+        scope.keep(state)
     return state.select("id", F.col("color").cast("long").alias("color"))

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphlite_spark.algos.components import connected_components_fast
-from graphlite_spark.checkpoint import loop_scope, truncate_plan
+from graphlite_spark.checkpoint import loop_scope
 
 
 def boruvka_msf(
@@ -51,17 +51,16 @@ def boruvka_msf(
         .groupBy("lo", "hi")
         .agg(F.min("w").alias("w"))
     )
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
     comp = vertices.select("id", F.col("id").alias("comp"))
     forest = spark.createDataFrame([], "lo long, hi long, w long")
     converged = False
-    prev_comp: DataFrame | None = None
+    # the loop's own rounds; the caller's vertices are never released
+    chosen = staged_comp = staged_forest = None
     with loop_scope(spark) as scope:
         # static side of the per-round label joins: partition + pre-sort
         # by the first join key so the round's SMJ re-sorts only the hi leg
-        staged = scope.stage(und, truncate=True)
+        staged, _ = scope.stage(und, truncate=True)
         und = scope.leaf(staged, "lo")
         scope.release(staged)
         for _ in range(max_rounds):
@@ -88,27 +87,28 @@ def boruvka_msf(
                     F.col("c2").alias("comp"), "w", "lo", "hi", "c1", "c2"
                 )
             )
-            obs = Observation()
-            chosen = truncate_plan(
+            chosen, row = scope.stage(
                 cand.groupBy("comp")
                 .agg(F.min(F.struct("w", "lo", "hi", "c1", "c2")).alias("m"))
                 .select("m.lo", "m.hi", "m.w", "m.c1", "m.c2")
-                .distinct()
-                .observe(obs, F.count(F.lit(1)).alias("n")),
-                eager=True,
+                .distinct(),
+                truncate=True,
+                prev=chosen,
             )
             # the convergence probe rides the materialization: no chosen
             # edge ⟺ no cross-component edge remains (every component
             # with a cross edge nominates one)
-            if not obs.get["n"]:
+            if not row["n"]:
                 converged = True
                 break
             # chosen edges never repeat across rounds (they always join
             # two DIFFERENT components, while every prior forest edge is
             # intra-component by construction) — plain append, no distinct
-            forest = truncate_plan(forest.unionByName(
-                chosen.select("lo", "hi", "w")
-            ), eager=True)
+            forest = staged_forest = scope.stage(
+                forest.unionByName(chosen.select("lo", "hi", "w")),
+                truncate=True,
+                prev=staged_forest,
+            )[0]
             # Borůvka contraction: merge classes along the CONTRACTED
             # chosen edges (component ids, a table that at least halves
             # every round) instead of re-running CC over the whole
@@ -121,14 +121,14 @@ def boruvka_msf(
                 .unionByName(chosen.select(F.col("c2").alias("id")))
                 .distinct()
             )
-            mapping = connected_components_fast(
+            mapping = scope.own(connected_components_fast(
                 cv,
                 chosen.select(
                     F.col("c1").alias("src"), F.col("c2").alias("dst")
                 ),
                 max_rounds=64,
-            )
-            nxt = scope.own(truncate_plan(
+            ))
+            comp = staged_comp = scope.stage(
                 comp.join(
                     mapping.withColumnRenamed("id", "mid"),
                     comp["comp"] == F.col("mid"),
@@ -137,12 +137,11 @@ def boruvka_msf(
                     "id",
                     F.coalesce("component", F.col("comp")).alias("comp"),
                 ),
-                eager=True,
-            ))
-            if prev_comp is not None:
-                scope.release(prev_comp)
-            scope.release(chosen)
-            prev_comp = comp = nxt
+                truncate=True,
+                prev=staged_comp,
+            )[0]
+            scope.release(mapping)
+        scope.keep(forest)
         if not converged:
             # Same loud-PARTIAL convention as scc / connected_components
             # (round-4 advisor): Borůvka needs up to log2(V) rounds — if

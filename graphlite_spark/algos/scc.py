@@ -58,15 +58,16 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import loop_scope, truncate_plan
+from graphlite_spark.checkpoint import LoopScope, loop_scope, truncate_plan
 
 
 def _min_reach_fixpoint(
-    verts: DataFrame, e: DataFrame, max_rounds: int
+    scope: LoopScope, verts: DataFrame, e: DataFrame, max_rounds: int
 ) -> tuple[DataFrame, bool]:
     """(labels, converged): lab(v) = min id over in-edge-ancestors(v) ∪ {v}
     of the graph ``e`` (src, dst), restricted to ``verts`` (id).  ``e``
     must already be repartitioned by src and persisted by the caller.
+    The rounds are staged in ``scope``, which owns the returned labels.
 
     Three accelerators per round, all adopting labels only from proven
     e-ancestors (so the fixpoint is exactly min(ancestors ∪ self)):
@@ -87,10 +88,6 @@ def _min_reach_fixpoint(
       connected_components_fast trick, which is the faster of the two
       jumps whenever labels DO decrease along the way.
     """
-    from pyspark.sql import Observation
-
-    from graphlite_spark.checkpoint import release_local_checkpoint
-
     j0 = e.groupBy(F.col("dst").alias("id")).agg(F.min("src").alias("j"))
     a = (
         verts.select("id")
@@ -101,7 +98,7 @@ def _min_reach_fixpoint(
             F.coalesce("j", F.col("id")).alias("j"),
         )
     )
-    prev = None  # superseded round leaves, released eagerly (loop discipline)
+    nxt = None
     for _ in range(max_rounds):
         nbr = (
             e.join(
@@ -132,31 +129,23 @@ def _min_reach_fixpoint(
             )
         )
         pt = b.select(F.col("id").alias("pid"), F.col("relaxed").alias("plab"))
-        nxt = (
+        # the change count (in place of the row count: the scope's width
+        # is pinned) rides the round's one materialization as an observed
+        # metric, and the superseded round is freed
+        nxt, row = scope.stage(
             b.join(pt, b["relaxed"] == pt["pid"])
             .select(
                 "id",
                 "old",
                 F.least(F.col("relaxed"), F.col("plab")).alias("lab"),
                 F.col("jj").alias("j"),
-            )
-        )
-        # the change count rides the round's one materialization as an
-        # observed metric (loop discipline — no separate agg action)
-        obs = Observation()
-        nxt = truncate_plan(
-            nxt.observe(
-                obs,
-                F.sum((F.col("lab") != F.col("old")).cast("long")).alias("n"),
             ),
-            eager=True,
+            truncate=True,
+            prev=nxt,
+            n=F.sum((F.col("lab") != F.col("old")).cast("long")),
         )
-        changed = obs.get["n"]
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = nxt
         a = nxt.select("id", "lab", "j")
-        if not changed:
+        if not row["n"]:
             return a.select("id", "lab"), True
     return a.select("id", "lab"), False
 
@@ -183,7 +172,7 @@ def strongly_connected_components(
     with loop_scope(edges.sparkSession, num_partitions) as scope:
         # stage the distinct edge set once (plan stats truncated: the peel
         # self-joins it every phase); it sizes the loop width
-        de = scope.stage(
+        de, _ = scope.stage(
             edges.select("src", "dst")
             .where(F.col("src") != F.col("dst"))
             .distinct(),
@@ -212,8 +201,12 @@ def strongly_connected_components(
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(2) as pool:
-                fut_f = pool.submit(_min_reach_fixpoint, rem, ef, max_rounds)
-                fut_b = pool.submit(_min_reach_fixpoint, rem, eb, max_rounds)
+                fut_f = pool.submit(
+                    _min_reach_fixpoint, scope, rem, ef, max_rounds
+                )
+                fut_b = pool.submit(
+                    _min_reach_fixpoint, scope, rem, eb, max_rounds
+                )
                 fwd, okf = fut_f.result()
                 bwd, okb = fut_b.result()
             if not (okf and okb):
@@ -228,15 +221,13 @@ def strongly_connected_components(
                 bwd.select(F.col("id").alias("bid"), F.col("lab").alias("b")),
                 fwd["id"] == F.col("bid"),
             ).select("id", F.col("lab").alias("f"), "b")
-            lab = truncate_plan(lab)
+            lab = scope.own(truncate_plan(lab))
             done = lab.where(F.col("f") == F.col("b")).select(
                 "id", F.col("f").alias("scc")
             )
-            assigned = truncate_plan(
-                done if assigned is None else assigned.unionByName(done)
-            )
+            assigned = done if assigned is None else assigned.unionByName(done)
             surv = lab.where(F.col("f") != F.col("b"))
-            n_rem = surv.count()  # also materializes lab + assigned
+            n_rem = surv.count()  # also materializes lab
             scope.release(ef, eb, fwd, bwd)
             if n_rem == 0:
                 converged = True
@@ -263,7 +254,7 @@ def strongly_connected_components(
                 )
                 .select("src", "dst")
             )
-            de = truncate_plan(de)
+            de = scope.own(truncate_plan(de))
             rem = surv.select("id")
         if not converged:
             warnings.warn(
@@ -279,6 +270,8 @@ def strongly_connected_components(
                     rem.select("id", F.col("id").alias("scc"))
                 )
             )
+        # materialized here: the union reads phase frames the scope frees
+        assigned = scope.keep(scope.stage(assigned, truncate=True)[0])
     return assigned
 
 

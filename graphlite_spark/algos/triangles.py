@@ -167,13 +167,16 @@ def triangle_count_per_vertex(
     )
 
 
-def _edge_support(und_edges: DataFrame, orient: str) -> DataFrame:
+def _edge_support(
+    und_edges: DataFrame | None, orient: str, o: DataFrame | None = None
+) -> DataFrame:
     """(lo, hi, support) — triangles through each surviving undirected
     edge.  Reuses the oriented triangle enumeration (degree orientation
     bounds wedge fan-out by O(sqrt(E)) under hub skew), then explodes each
     triangle into its three undirected edges and counts — one
-    map-side-combined groupBy, no per-edge neighbor-set intersection."""
-    tri = _triangle_rows(und_edges, orient)
+    map-side-combined groupBy, no per-edge neighbor-set intersection.
+    ``o``: pre-materialized oriented arcs, as :func:`_triangle_rows`."""
+    tri = _triangle_rows(und_edges, orient, o=o)
     pairs = tri.select(
         F.explode(
             F.array(
@@ -251,37 +254,40 @@ def k_truss(
     degree orientation) + one map-side-combined support count + one
     semi-join; the surviving set only shrinks, so round cost is
     monotonically decreasing.  Loop discipline matches k_core: AQE off,
-    lazy localCheckpoint per round, one count action per round.
+    one eager checkpoint per round with the survivor count observed on
+    it — one job per round, and each round frees the one before it.
     """
     if k < 3:
         raise ValueError("k-truss requires k >= 3 (k=2 is the whole graph)")
-    from pyspark.sql import Observation
-
-    with loop_scope(edges.sparkSession):
-        base = _undirected(edges).localCheckpoint(eager=True)
-        alive = base
-        prev_n = alive.count()
+    with loop_scope(edges.sparkSession) as scope:
+        # the staged edge set's count is the first round's baseline
+        base, row = scope.stage(_undirected(edges))
+        alive, prev_n = base, row["n"]
+        prev = None  # the result reads base, so only rounds are freed
         for _ in range(max_rounds):
-            sup = _edge_support(
-                alive.select(F.col("lo").alias("src"), F.col("hi").alias("dst")),
-                orient,
-            )
-            # survivor count rides the round's materialization (observed
-            # metric) — no separate count() action per round
-            obs = Observation()
-            alive = (
+            # the round's closure and oriented arcs (the _oriented
+            # leaves), freed once the round is staged
+            und = scope.own(_undirected(
+                alive.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
+            ).localCheckpoint(eager=True))
+            o = scope.own(_oriented(None, orient, und=und))
+            sup = _edge_support(None, orient, o=o)
+            alive, row = scope.stage(
                 alive.join(
                     sup.where(F.col("support") >= k - 2).select("lo", "hi"),
                     ["lo", "hi"],
                     "left_semi",
-                )
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+                ),
+                prev=prev,
             )
-            n = int(obs.get["n"] or 0)
-            if n == prev_n:
+            scope.release(und, o)
+            prev = alive
+            if row["n"] == prev_n:
                 break
-            prev_n = n
+            prev_n = row["n"]
+        # the returned join reads both the edge set and the truss
+        scope.keep(base)
+        scope.keep(alive)
     kept = alive.select(
         F.col("lo").alias("klo"), F.col("hi").alias("khi")
     )

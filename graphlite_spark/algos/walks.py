@@ -63,7 +63,7 @@ def _ranked_adjacency(
         symmetrize(edges).select("src", "dst")
         if undirected
         else edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    )
+    )[0]
     if max_degree is not None:
         if max_degree < 1:
             raise ValueError("max_degree must be >= 1 (or None for exact)")
@@ -335,7 +335,7 @@ def metapath_walks(
     with loop_scope(edges.sparkSession, num_partitions) as scope:
         # staged typed closure: data-sized width + pre-sorted leaves, the
         # walks-family discipline (see _ranked_adjacency)
-        staged = scope.stage(typed)
+        staged, _ = scope.stage(typed)
         adj = scope.leaf(
             staged.withColumn("idx", F.row_number().over(w) - F.lit(1)),
             "src", "src", "dtype", "idx",

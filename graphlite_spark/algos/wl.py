@@ -39,9 +39,9 @@ def wl_refinement(
     degree, round 2 degree-of-neighbors, ...)."""
     with loop_scope(edges.sparkSession) as scope:
         und = scope.own(symmetrize(edges).select("src", "dst").persist())
-        state = vertices.select(
+        state = scope.own(vertices.select(
             "id", hash48(F.lit("wl:0")).alias("color")
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False))
         for _ in range(iterations):
             nbr = (
                 und.join(
@@ -62,7 +62,7 @@ def wl_refinement(
                 )
                 .select(F.col("dst").alias("nid"), "nbrs")
             )
-            state = (
+            state = scope.own(
                 state.join(nbr, state["id"] == nbr["nid"], "left")
                 .select(
                     "id",
@@ -78,6 +78,7 @@ def wl_refinement(
                 .localCheckpoint(eager=False)
             )
         state.count()
+        scope.keep(state)
     return state
 
 

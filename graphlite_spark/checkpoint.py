@@ -27,15 +27,14 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import warnings
 from contextlib import contextmanager
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-STATE_COLS = ["id", "out_degree", "value", "active", "send"]
 
 
 def _aggr_json(aggr: dict) -> dict:
@@ -135,6 +134,15 @@ def release_local_checkpoint(df: DataFrame) -> None:
 
 _release_warned = False
 
+
+def observe(df: DataFrame, *metrics: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with ``metrics`` (aliased aggregates) observed by whichever
+    job materializes it, and the :class:`~pyspark.sql.Observation` whose
+    ``get`` returns them once that job has run."""
+    obs = Observation()
+    return df.observe(obs, *metrics), obs
+
+
 #: session settings every iterative loop pins, saved and restored by
 #: :func:`loop_scope`
 LOOP_CONF = (
@@ -150,17 +158,23 @@ ROWS_PER_PARTITION = 100_000
 
 class LoopScope:
     """Handle yielded by :func:`loop_scope`: sizes the loop's shuffle
-    width once and owns every frame it stages, so the scope's exit can
-    release them all."""
+    width once and owns every frame the loop checkpoints — made by
+    :meth:`stage` / :meth:`leaf` or handed to :meth:`own` — freeing them
+    at exit except the one the loop :meth:`keep`-s.  An eager round frees
+    the round it supersedes (``stage(..., prev=...)``), so only the
+    current round stays live, as GraphLite swaps two message generations;
+    a lazy round (``localCheckpoint(eager=False)``) is read by the next
+    one, so the chain is freed at exit."""
 
     def __init__(self, spark: SparkSession, num_partitions: int | None,
                  session_width: int):
         self.spark = spark
         #: the loop's shuffle width; None until the first stage/leaf
         self.num_partitions = num_partitions
-        #: row count of the most recently staged frame
-        self.rows: int | None = None
         self._session_width = session_width
+        # concurrent fixpoints (scc's forward/backward threads) stage
+        # into one scope
+        self._lock = threading.Lock()
         self._owned: list[DataFrame] = []
 
     def size(self, rows: int) -> int:
@@ -175,8 +189,16 @@ class LoopScope:
         return self.num_partitions
 
     def own(self, df: DataFrame) -> DataFrame:
-        """Register a checkpointed or persisted frame for release at exit."""
-        self._owned.append(df)
+        """Register a checkpointed or persisted frame (or a projection of
+        one) for release at exit."""
+        with self._lock:
+            self._owned.append(df)
+        return df
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand ``df`` back to the caller: it survives the scope's exit."""
+        with self._lock:
+            self._owned = [o for o in self._owned if o is not df]
         return df
 
     def release(self, *dfs: DataFrame) -> None:
@@ -187,23 +209,29 @@ class LoopScope:
                 df.unpersist()
             else:
                 release_local_checkpoint(df)
-            self._owned = [o for o in self._owned if o is not df]
+            self.keep(df)
 
-    def stage(self, df: DataFrame, truncate: bool = False) -> DataFrame:
-        """Eagerly checkpoint ``df`` (``truncate``: via
-        :func:`truncate_plan`, for self-joining loops) and size the width
-        from its row count — the count rides the checkpoint's own job as
-        an observed metric, so staging costs one job."""
-        obs = Observation()
-        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        staged = (
+    def stage(self, df: DataFrame, truncate: bool = False,
+              prev: DataFrame | None = None,
+              **aggs: Column) -> tuple[DataFrame, dict]:
+        """Eagerly checkpoint and own ``df`` (``truncate``: via
+        :func:`truncate_plan`, for self-joining loops), then release
+        ``prev``, the round it supersedes.  Returns the staged frame and
+        the observed ``n`` (row count) and ``aggs``, which ride the
+        checkpoint's one job; the first stage sizes the width from ``n``.
+        Once the width is pinned, a loop may name its own ``n``.  The row
+        is returned, not stored: concurrent fixpoints share a scope."""
+        metrics = {"n": F.count(F.lit(1)), **aggs}
+        observed, obs = observe(df, *(c.alias(k) for k, c in metrics.items()))
+        staged = self.own(
             truncate_plan(observed, eager=True) if truncate
             else observed.localCheckpoint(eager=True)
         )
-        self.own(staged)
-        self.rows = int(obs.get["n"] or 0)
-        self.size(self.rows)
-        return staged
+        row = obs.get
+        self.size(int(row["n"] or 0))
+        if prev is not None:
+            self.release(prev)
+        return staged, row
 
     def leaf(self, df: DataFrame, key: str, *order: str) -> DataFrame:
         """The loop's static side: ``df`` hash-partitioned by ``key`` at
@@ -215,7 +243,7 @@ class LoopScope:
         sized yet (counting a staged copy, not the caller's plan)."""
         staged = None
         if self.num_partitions is None:
-            df = staged = self.stage(df)
+            df = staged = self.stage(df)[0]
         leaf = self.own(
             df.repartition(self.num_partitions, key)
             .sortWithinPartitions(*(order or (key,)))
@@ -244,8 +272,12 @@ def loop_scope(spark: SparkSession, num_partitions: int | None = None,
     data by the first :meth:`LoopScope.stage` / :meth:`LoopScope.leaf`
     (``max(1, min(session width, rows // 100_000 + 1))``).
 
-    Exit releases every frame the scope owns and restores the saved
-    settings — nested scopes restore their enclosing scope's values.  If
+    Exit frees every frame the scope owns except those the loop
+    :meth:`~LoopScope.keep`-s, and restores the saved settings — nested
+    scopes restore their enclosing scope's values.  A frame a nested
+    loop keeps is the enclosing loop's to ``own``.  The loop must have
+    materialized whatever it returns before exit: a lazy plan over owned
+    round frames would read freed blocks.  If
     the body raises, every RDD persisted since entry is unpersisted too
     (a failed eager checkpoint registers one nobody holds), assuming, as
     the session-wide settings already do, that no other thread creates
@@ -274,16 +306,6 @@ def loop_scope(spark: SparkSession, num_partitions: int | None = None,
         scope.release(*scope._owned)
         for k, v in saved.items():
             spark.conf.set(k, v)
-
-
-class LocalCheckpointer:
-    """Lineage truncation only (no durability) — the default."""
-
-    def save(self, df: DataFrame, superstep: int, aggr: dict, run_id: str) -> DataFrame:
-        return df.localCheckpoint(eager=True)
-
-    def commit(self, superstep: int, aggr: dict, run_id: str) -> None:
-        pass
 
 
 class ParquetCheckpointer:

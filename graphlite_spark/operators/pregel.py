@@ -49,14 +49,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphlite_spark.checkpoint import (
-    LoopScope,
-    loop_scope,
-    release_local_checkpoint,
-)
+from graphlite_spark.checkpoint import LoopScope, loop_scope, observe
 
 
 def _coerce_aggr(v):
@@ -413,17 +409,14 @@ class PregelEngine:
         metrics: list[SuperstepMetrics] = []
         converged = False
         superstep = start_step - 1
-        # handle on the PREVIOUS superstep's checkpointed state: once the
-        # current superstep's one action has materialized the new state,
-        # nothing can re-read the old blocks (the new frame is a leaf),
-        # so they are released eagerly instead of waiting for the
-        # ContextCleaner's GC-driven sweep — measured: the sweep arrives
-        # in bursts that stall whole superstep windows (~4x wall for 5-8
-        # consecutive supersteps), and at 10^12 vertices the un-released
-        # backlog is V-sized per superstep, which is fatal long before
-        # GC fires.  Only frames THIS loop created are released (never a
-        # caller's resume_from frame), and never the final state.
-        prev_owned: DataFrame | None = None
+        # the PREVIOUS superstep's state is released once the current
+        # superstep's one action has materialized the new leaf, not left
+        # to the ContextCleaner's GC-driven sweep — measured: the sweep
+        # arrives in bursts that stall whole superstep windows (~4x wall
+        # for 5-8 consecutive supersteps), and at 10^12 vertices the
+        # backlog is V-sized per superstep.  Only frames this loop made
+        # are owned (never a resume_from frame); the final state is kept.
+        prev: DataFrame | None = None
         # engine-static Columns, built once per run (each F.* call is a
         # Python↔JVM round-trip; a superstep used to spend ~600 of them
         # rebuilding identical expression trees — ~100-150 ms/superstep of
@@ -523,8 +516,7 @@ class PregelEngine:
             # exchange and a driver result-collect socket per superstep —
             # measured ~60-100 ms/superstep in local mode, and one fewer
             # full pass over the state at cluster scale.
-            obs = Observation()
-            observed = new_state.observe(obs, *ex["obs"])
+            observed, obs = observe(new_state, *ex["obs"])
             import os as _os
 
             if _os.environ.get("SPARK_GRAFT_EXPLAIN_SS") == str(superstep):
@@ -537,10 +529,10 @@ class PregelEngine:
             # (run an action over it) before returning — both in-repo
             # checkpointers do (eager localCheckpoint / parquet write) —
             # which is what delivers the observed metrics read next.
-            new_state = self._truncate(observed, superstep, aggr)
-            if prev_owned is not None:
-                release_local_checkpoint(prev_owned)
-            prev_owned = new_state
+            new_state = scope.own(self._truncate(observed, superstep, aggr))
+            if prev is not None:
+                scope.release(prev)
+            prev = new_state
             pm = algo.point_messages(new_state, superstep, aggr_in)
             stats_row = obs.get
             active_cnt = int(stats_row["_act"] or 0)
@@ -602,6 +594,7 @@ class PregelEngine:
             inbox = algo.combine(msgs)
             state = new_state.select("id", "out_degree", "value", "active")
 
+        scope.keep(prev)
         final = state.select("id", "value", "out_degree", "active")
         return PregelResult(
             state=final,

@@ -2402,7 +2402,7 @@ def dbscan_labels(
     with loop_scope(embeddings.sparkSession, broadcast=True) as scope:
         scope.size(q.count() * knn_k)
         c = q.select(F.col("id").alias("nid"), F.col("qv").alias("cv"))
-        d2 = (
+        d2 = scope.own(
             q.join(F.broadcast(c), F.col("id") != F.col("nid"))
             .select(
                 "id", "nid",
@@ -2445,15 +2445,17 @@ def dbscan_labels(
             .where(F.col("nn") >= min_pts - 1)
             .select("id")
         )
-        ce = (
+        ce = scope.own(
             near.join(core, "id", "left_semi")
             .join(
                 core.select(F.col("id").alias("nid")), "nid", "left_semi"
             )
             .localCheckpoint(eager=False)
         )
-        lab = core.select("id", F.col("id").alias("label")).localCheckpoint(
-            eager=False
+        lab = scope.own(
+            core.select("id", F.col("id").alias("label")).localCheckpoint(
+                eager=False
+            )
         )
         for _ in range(rounds):
             gathered = (
@@ -2466,7 +2468,7 @@ def dbscan_labels(
                 .groupBy("id")
                 .agg(F.min("nl").alias("ml"))
             )
-            lab = (
+            lab = scope.own(
                 lab.join(gathered, "id", "left")
                 .select(
                     "id",

@@ -1,7 +1,8 @@
 """Every iterative operator runs inside ``checkpoint.loop_scope``: the
-shared session must come out of a loop exactly as it went in — the
-three pinned settings restored and no checkpoint or cache blocks left
-registered — also when an input frame fails at execution time."""
+shared session must come out of a loop as it went in — the three pinned
+settings restored, and no checkpoint or cache blocks left registered
+beyond the one frame a successful call returns (none when an input
+frame fails at execution time)."""
 
 from __future__ import annotations
 
@@ -145,15 +146,24 @@ def test_failed_loop_leaves_session_as_found(spark, name, side):
     assert _persistent_ids(spark) - before == set()
 
 
-# the engine, a two-scope loop, and a loop with a nested scope
-@pytest.mark.parametrize(
-    "name", ["pagerank", "strongly_connected_components", "boruvka_msf"]
-)
-def test_loop_restores_conf(spark, name):
+# new persistent RDDs a successful call may leave: the one frame its
+# result reads, none where the result is built on the driver
+LEFT = {
+    "peel_layer_histogram": 0,
+    "neighborhood_function": 0,
+    "spectral_gap_lambda2": 0,
+    # the returned join reads both the staged edge set and the truss
+    "k_truss": 2,
+}
+
+
+@pytest.mark.parametrize("name", list(OPS))
+def test_successful_loop_leaves_session_as_found(spark, name):
     v, e = _graph(spark)
-    conf = _conf(spark)
+    conf, before = _conf(spark), _persistent_ids(spark)
     OPS[name][0](v, e).collect()
     assert _conf(spark) == conf
+    assert len(_persistent_ids(spark) - before) <= LEFT.get(name, 1)
 
 
 def test_nested_scopes_restore_enclosing_settings(spark):
@@ -182,12 +192,55 @@ def test_nested_scopes_restore_enclosing_settings(spark):
 def test_scope_sizes_width_from_staged_rows(spark):
     from graphlite_spark.checkpoint import loop_scope
 
+    before = _persistent_ids(spark)
     with loop_scope(spark) as scope:
         leaf = scope.leaf(spark.range(10).select(F.col("id").alias("src")), "src")
-        assert scope.rows == 10
         assert scope.num_partitions == 1
         assert leaf.rdd.getNumPartitions() == 1
         assert sorted(r["src"] for r in leaf.collect()) == list(range(10))
+        first, row = scope.stage(spark.range(4), odd=F.sum(F.col("id") % 2))
+        assert row == {"n": 4, "odd": 2}
+        second, row = scope.stage(
+            first.where(F.col("id") > 0), prev=first, top=F.max("id")
+        )
+        assert (row["n"], row["top"]) == (3, 3)
+        # the leaf and the current round: prev was released at once
+        assert len(_persistent_ids(spark) - before) == 2
+        kept = scope.keep(second)
+    assert len(_persistent_ids(spark) - before) == 1
+    assert sorted(r["id"] for r in kept.collect()) == [1, 2, 3]
+
+
+def test_concurrent_own_and_keep_lose_no_frame():
+    """scc and bow-tie run two fixpoints on threads against one scope: a
+    ``keep`` that rebinds the owned list must not drop another thread's
+    ``own``."""
+    import sys
+    import threading
+
+    from graphlite_spark.checkpoint import LoopScope
+
+    scope = LoopScope(None, 1, 1)  # own/keep never touch the session
+    frames = [[object() for _ in range(100)] for _ in range(16)]
+
+    def work(mine):
+        for f in mine:
+            scope.own(f)
+            scope.keep(mine[0])  # rebinds the owned list
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(m,)) for m in frames]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    owned = {id(f) for f in scope._owned}
+    assert all(id(f) in owned for mine in frames for f in mine[1:])
 
 
 def test_release_warns_once_without_jvm_handle(monkeypatch):

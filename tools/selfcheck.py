@@ -3,6 +3,10 @@ at the driver's own scale (sf0.01 by default) and write a per-query
 artifact.  The driver caps at 50 rows/round; this closes the evidence gap
 for everything past position 50 (VERDICT r4: "evidence-budget gap").
 
+Each record also carries ``persistent_rdds``, the session's count of
+registered persistent RDDs after the query, so storage that drifts up
+across the sweep shows in the artifact.
+
 Usage: python tools/selfcheck.py [out.json]
 Env: SPARK_GRAFT_TEST_SF (default /root/testdata/sf0.01)
 """
@@ -72,6 +76,7 @@ def main():
                 results[rec["name"]] = rec
                 done.add(rec["name"])
     logf = open(LOG, "a")
+    jsc = spark.sparkContext._jsc
     names = list(qs)
     for i, name in enumerate(names):
         if name in done:
@@ -96,6 +101,7 @@ def main():
             rec["detail"] = f"{type(e).__name__}: {e}"[:500]
             traceback.print_exc()
         rec["sec"] = round(time.time() - t0, 2)
+        rec["persistent_rdds"] = int(jsc.getPersistentRDDs().size())
         results[name] = rec
         logf.write(json.dumps(rec) + "\n")
         logf.flush()
@@ -103,6 +109,7 @@ def main():
               flush=True)
     logf.close()
     n_ok = sum(1 for r in results.values() if r["ok"])
+    held = [r["persistent_rdds"] for r in results.values() if "persistent_rdds" in r]
     summary = {
         "sf_dir": SF_DIR,
         "total": len(names),
@@ -111,7 +118,14 @@ def main():
         "error": [n for n, r in results.items() if r["oracle"] == "ERROR"],
         "rows_only": [n for n, r in results.items() if r["oracle"] == "rows-only"],
         "total_sec": round(sum(r.get("sec", 0) for r in results.values()), 1),
-        "queries": {n: {k: r[k] for k in ("oracle", "rows", "sec", "detail") if k in r}
+        # registered persistent RDDs after each query: the sweep's max and
+        # the count the last query left
+        "persistent_rdds": {
+            "max": max(held, default=None),
+            "final": held[-1] if held else None,
+        },
+        "queries": {n: {k: r[k] for k in ("oracle", "rows", "sec", "detail",
+                                          "persistent_rdds") if k in r}
                     for n, r in results.items()},
     }
     with open(OUT, "w") as f:
